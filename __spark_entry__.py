@@ -4415,17 +4415,12 @@ def q_daily_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("l_partkey").alias("partkey"),
                    F.col("l_extendedprice").alias("dis24"))
 
-    # exact_impl pinned: the incremental pipeline KNOWS its day slices
-    # are many-small-groups ensembles (never hot-keyed), so it skips the
-    # adaptive router's shape probe — the r17 default exists for
-    # unknown-shape callers, and a per-day pipeline would otherwise pay
-    # one probe job per slice per publish (4 per execution here)
     def detailed(day_label: str, scale: float = 1.0) -> DataFrame:
         f = (fc.filter(F.col("day") == day_label)
              .select("partkey", (F.col("dis24") * F.lit(scale))
                      .alias("dis24")))
         return ensemble_threshold_summary(
-            f, thresholds, accuracy_mode="exact", exact_impl="percentile",
+            f, thresholds, accuracy_mode="exact",
             join_keys=("partkey",), group_keys=("partkey",)) \
             .withColumn("day", F.lit(day_label))
 
@@ -4441,7 +4436,7 @@ def q_daily_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # commits only its own day= directories.
     base_days = ensemble_threshold_summary(
         fc.filter(F.col("day").isin("d0", "d1")),
-        thresholds, accuracy_mode="exact", exact_impl="percentile",
+        thresholds, accuracy_mode="exact",
         join_keys=("partkey",), group_keys=("day", "partkey"))
 
     store = _scratch_dir("daily_store_")
@@ -11417,10 +11412,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT point_id, query_latitude, query_longitude,
                    partkey, latitude, longitude, val
             FROM cells c JOIN points p
-              ON CAST(floor(c.latitude / 0.05) AS BIGINT)
-                 = CAST(floor(p.query_latitude / 0.05) AS BIGINT)
-             AND CAST(floor(c.longitude / 0.05) AS BIGINT)
-                 = CAST(floor(p.query_longitude / 0.05) AS BIGINT)
+              ON CAST(floor(round(c.latitude / 0.05, 9)) AS BIGINT)
+                 = CAST(floor(round(p.query_latitude / 0.05, 9)) AS BIGINT)
+             AND CAST(floor(round(c.longitude / 0.05, 9)) AS BIGINT)
+                 = CAST(floor(round(p.query_longitude / 0.05, 9)) AS BIGINT)
         """,
         "q_morton_key": """
             WITH cells AS (
@@ -11430,8 +11425,8 @@ def oracle_sql() -> dict[str, str]:
                 FROM part),
             idx AS (
                 SELECT partkey, latitude, longitude,
-                       CAST(floor(latitude / 0.05) AS BIGINT) + 1048576 AS bx,
-                       CAST(floor(longitude / 0.05) AS BIGINT) + 1048576 AS by
+                       CAST(floor(round(latitude / 0.05, 9)) AS BIGINT) + 1048576 AS bx,
+                       CAST(floor(round(longitude / 0.05, 9)) AS BIGINT) + 1048576 AS by
                 FROM cells),
             -- part1by1 spread (5 shift/mask rounds), lat lane then lon lane
             s0 AS (SELECT partkey, latitude, longitude,
@@ -11654,8 +11649,8 @@ def oracle_sql() -> dict[str, str]:
                    round(sum(f.value), 2) AS sum_value
             FROM forecast f
             JOIN upstream u
-              ON floor(f.latitude / 0.05) = floor(u.latitude / 0.05)
-             AND floor(f.longitude / 0.05) = floor(u.longitude / 0.05)
+              ON floor(round(f.latitude / 0.05, 9)) = floor(round(u.latitude / 0.05, 9))
+             AND floor(round(f.longitude / 0.05, 9)) = floor(round(u.longitude / 0.05, 9))
             WHERE u.uparea IS NOT NULL AND u.uparea >= 2.5e8
             GROUP BY f.latitude, f.longitude
         """,

@@ -546,17 +546,19 @@ def _skewed_forecast(spark, sf_dir):
 
 def _q_threshold_summary_skew(spark, sf_dir):
     """Flagship exceedance summary on the hot-cell tier, EXACT
-    percentiles: the hot cell's every row must reach one reducer's
-    percentile buffer (exact percentile partials are the raw values —
-    salting cannot shrink what the final merge must hold), so this
-    entry measures the irreducible straggler."""
+    percentiles: the hot cell's every row must reach one reducer (exact
+    quantiles need every raw value — salting cannot shrink what the
+    final merge must hold), so this entry measures the irreducible
+    straggler.  The caller knows the tier has one ~1.5M-row group, so
+    it names the sorted-window route (exact_impl="ranks"), the measured
+    winner on few-huge-groups shapes."""
     import __spark_entry__ as entry_mod
     from flood_data_spark.operators.threshold import \
         ensemble_threshold_summary
     return ensemble_threshold_summary(
         _skewed_forecast(spark, sf_dir), entry_mod._thresholds(spark, sf_dir),
         accuracy_mode="exact", join_keys=("partkey",),
-        group_keys=("partkey",))
+        group_keys=("partkey",), exact_impl="ranks")
 
 
 def _q_threshold_summary_skew_approx(spark, sf_dir):
@@ -751,7 +753,7 @@ def _q_daily_incremental_x10(spark, sf_dir):
              .select("partkey",
                      (F.col("dis24") * F.lit(scale)).alias("dis24")))
         return ensemble_threshold_summary(
-            f, thresholds, accuracy_mode="exact", exact_impl="percentile",
+            f, thresholds, accuracy_mode="exact",
             join_keys=("partkey",), group_keys=("partkey",)) \
             .withColumn("day", F.lit(day_label))
 
@@ -761,12 +763,9 @@ def _q_daily_incremental_x10(spark, sf_dir):
     # publish (guide §2.6; disjoint partitions, per-job staging dirs).
     # Store on tmpfs like the registry twin's _scratch_dir (r15 lesson:
     # /tmp measures this box's 62 MB/s virtio, not the operator).
-    # exact_impl pinned to match the registry twin (the incremental
-    # pipeline knows its slices are many-small-groups; without the pin
-    # the r17 adaptive router pays 4 probe jobs per execution here)
     base_days = ensemble_threshold_summary(
         fc.filter(F.col("day").isin("d0", "d1")),
-        thresholds, accuracy_mode="exact", exact_impl="percentile",
+        thresholds, accuracy_mode="exact",
         join_keys=("partkey",), group_keys=("day", "partkey"))
 
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
@@ -1131,15 +1130,13 @@ def _q_textrank_full(spark, sf_dir):
 def _q_quantile_map_x10(spark, sf_dir):
     """Quantile-mapping bias correction at 10x: the ~850k-row sim
     relation (every 7th order of the replicated lineitem tier) through
-    the adaptive rank and the order-statistic equi-join — the
-    registry entry's plan at a corpus-sized sim side.  Round 15: the
-    operator now PROBES group sizes (bounded 2-row collect off a
-    value-hash sample) and picks the classic single-window rank here
-    (286k rows/group — sorts are task-sized) or the bucketed two-pass
-    rank for pathological few-group corpora (measured 105 s -> 30.6 s
-    at 3 groups x 8M rows; docs/PLANS.md).  This tier measures the
-    auto path = classic + ~0.2 s probe.  The sim corpus moves ONCE;
-    the obs side stays m-bounded."""
+    the classic single-window rank and the order-statistic equi-join —
+    the registry entry's plan at a corpus-sized sim side.  The caller
+    names the rank route: the default classic window here (286k
+    rows/group — sorts are task-sized); the bucketed two-pass rank
+    (nbuckets=B) pays off only past ~2M rows/group (measured 105 s ->
+    30.6 s at 3 groups x 8M rows; docs/PLANS.md).  The sim corpus
+    moves ONCE; the obs side stays m-bounded."""
     from pyspark.sql import functions as F
 
     from flood_data_spark.operators.postprocess import quantile_map
@@ -1157,14 +1154,14 @@ def _q_quantile_map_x10(spark, sf_dir):
 
 
 def _q_quantile_map_bucketed(spark, sf_dir):
-    """The BUCKETED two-pass rank forced on the same x10 relation
-    (bucket_threshold=0): the plan quantile_map auto-selects once
-    groups pass ~2M rows, measured here at gate volume so the
-    committed artifact carries BOTH paths' cost side by side — at
-    this size the classic window wins (the machinery costs ~2 extra
-    corpus passes, docs/PLANS.md), at the pathological 3-group × 8M
-    shape the bucketed plan wins 3.4× (105 -> 30.6 s, probed).
-    Exactness is identical either way (bucketed==classic pinned in
+    """The BUCKETED two-pass rank named on the same x10 relation
+    (nbuckets=32): the route a caller names once groups pass ~2M
+    rows, measured here at gate volume so the committed artifact
+    carries BOTH routes' cost side by side — at this size the classic
+    window wins (the machinery costs ~2 extra corpus passes,
+    docs/PLANS.md), at the pathological 3-group × 8M shape the
+    bucketed plan wins 3.4× (105 -> 30.6 s).  Exactness is identical
+    either way (bucketed==classic pinned in
     tests/test_round15_ops.py)."""
     from pyspark.sql import functions as F
 
@@ -1179,8 +1176,7 @@ def _q_quantile_map_bucketed(spark, sf_dir):
            .select(F.col("l_returnflag").alias("flag"),
                    (F.col("l_extendedprice") / F.lit(800.0)
                     + F.lit(3.0)).alias("flow")))
-    return quantile_map(sim, obs, "flow", ["flag"],
-                        bucket_threshold=0)
+    return quantile_map(sim, obs, "flow", ["flag"], nbuckets=32)
 
 
 def _q_regrid_big(spark, sf_dir):
@@ -1375,7 +1371,7 @@ def main():
     # argument as the blocks above) measured cold pass-1 8.5-13.5 s →
     # 6.9-8.0 s across 3 fresh JVMs (JIT 20-23 s → 11 s) and tightens the
     # cold spread to ≤1.2x.  Both exact routes are warmed (percentile:
-    # the x10/x100 entries; ranks: the skew entry's adaptive route).
+    # the x10/x100 entries; ranks: the route the skew entry names).
     from flood_data_spark.operators.threshold import (
         ensemble_threshold_summary as _warm_ets)
     _warm_fc = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(

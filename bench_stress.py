@@ -26,8 +26,8 @@ Entries and their linear-extrapolation bases:
   q_ivf_probe_x100tier        with corpus/nlist*nprobe, never corpus²
   q_quantile_map_patho        3 groups x 8M rows (the pathological
                               few-huge-groups shape from docs/PLANS.md,
-                              previously prose-only): the adaptive probe
-                              must pick the bucketed rank (measured
+                              previously prose-only): the caller names
+                              the bucketed rank (nbuckets=32; measured
                               105 s classic / ~30 s bucketed at r15)
 
 All tiers are deterministic, generated once OUTSIDE the timed region,
@@ -294,14 +294,14 @@ def _q_ivf_probe_x100tier(spark, sf_dir):
 
 
 def _q_quantile_map_patho(spark, sf_dir):
-    """quantile_map on the 3-groups x 8M-rows shape: the exact probe
-    must pick the bucketed two-pass rank (classic serializes into 3
-    sort tasks — 105 s measured at r15)."""
+    """quantile_map on the 3-groups x 8M-rows shape: the caller names
+    the bucketed two-pass rank, because the classic window serializes
+    into 3 sort tasks (105 s measured at r15)."""
     from flood_data_spark.operators.postprocess import quantile_map
     sim_path, obs_path = _patho_paths(spark)
     sim = spark.read.parquet(sim_path)
     obs = spark.read.parquet(obs_path)
-    return quantile_map(sim, obs, "v", ["grp"])
+    return quantile_map(sim, obs, "v", ["grp"], nbuckets=32)
 
 
 STRESS_QUERIES = {

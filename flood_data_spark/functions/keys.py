@@ -37,15 +37,19 @@ def round_keys(df: DataFrame, precision: int | None = None,
 
 
 def grid_index(col, resolution: float | None = None):
-    """Integer grid index for a coordinate: floor(coord / resolution).
+    """Integer grid index for a coordinate: floor(round(coord / res, 9)).
 
     Robust surrogate for float keys: cell *centers* sit at (k + 0.5) * res,
     i.e. mid-bucket under floor, so noise up to res/2 cannot move them to a
     neighboring index.  (round() would place centers exactly on rounding
     boundaries — 0.225/0.05 = 4.5 vs 0.275/0.05 = 5.4999… collide at 5.)
+    Rounding the quotient to 9 decimals first keeps a point on a cell edge
+    in the cell east/north of it, the serving rule: the binary quotient of
+    a decimal edge can land just below the integer (11.35 / 0.05 =
+    226.99999999999997).
     """
     res = resolution if resolution is not None else DEFAULT_CONFIG.resolution
-    return F.floor(F.col(col) / F.lit(res)).cast("long")
+    return F.floor(F.round(F.col(col) / F.lit(res), 9)).cast("long")
 
 
 def with_grid_index(df: DataFrame, resolution: float | None = None,

@@ -27,30 +27,25 @@ groups sorts each group in ONE task — measured 25.3 s cold at x10,
 and a single-task 100M-row sort at 100× data.  But the bucketed
 machinery that fixes it costs ~2 extra corpus passes, which LOSES at
 ordinary scale (measured: 3.9 s classic vs 6.9-9.0 s bucketed at the
-857k-row x10 gate, where each per-group sort is ~1 s).  So the
-operator is ADAPTIVE with a bounded probe:
+857k-row x10 gate, where each per-group sort is ~1 s).  So the caller
+names the route from the group sizes it knows, and building the plan
+fires no job:
 
-  - ONE driver-side action collects per side the EXACT maximum group
-    size (groupBy keys → count → max: map-side combined, only
-    groups-cardinality rows shuffle, deterministic and
-    partitioning-invariant by construction — a value-hash SAMPLE was
-    rejected because sampling is all-or-nothing per distinct value,
-    so a duplicate-heavy group misestimates by up to SAMPLE_RATE× and
-    picks the wrong path).  The collected relation is ≤ 2 rows (one
-    per side) — the same bounded-scalar contract as
-    datapipe/unigram.py's corpus stats.
-  - Sides whose largest group stays under `bucket_threshold` keep the
-    classic single-window plan — zero machinery, the measured-fast
-    path at gate scale.
-  - Sides past the threshold switch to the BUCKETED TWO-PASS rank
-    (the r8 equi-depth histogram trick): per-group value-quantile
-    boundaries sketched from the sample (percentile_approx — accuracy
-    only steers LOAD BALANCE, never output values), rows bucket by
+  - `nbuckets=None` (default) keeps the classic single-window plan —
+    zero machinery, the measured-fast path while groups stay under
+    ~2M rows (a one-task sort of ~2M longs is cheaper than the bucket
+    machinery that would replace it).
+  - `nbuckets=B` (B ≥ 2) switches to the BUCKETED TWO-PASS rank
+    (the r8 equi-depth histogram trick) for groups past ~2M rows:
+    per-group value-quantile boundaries sketched from the sample
+    (percentile_approx — accuracy only steers LOAD BALANCE, never
+    output values), rows bucket by
     boundary count (a pure function of the value, so ties never
     straddle buckets), row_number within (group, bucket), then exact
     per-bucket prefix-count offsets off a groups×B-bounded broadcast:
     rank = offset + within-bucket row_number — EXACTLY the global
-    per-group rank, with sort parallelism groups×B instead of groups.
+    per-group rank, with sort parallelism groups×B instead of groups
+    (measured 105 s classic → 30.6 s bucketed at 3 groups × 8M rows).
 
 Scale posture: the corpus moves once into its rank exchange (+ the
 sample scan and, on the bucketed path, one counting pass — all cheap
@@ -81,12 +76,8 @@ from flood_data_spark.datapipe.linalg import _idiv_half_up
 MICRO = 1_000_000
 # 1-in-SAMPLE_RATE value-hash sample feeds the bucketed path's
 # BOUNDARY sketch (load balance only — fine for ties to be
-# all-or-nothing there); the path-pick probe counts exactly.  Groups
-# under BUCKET_THRESHOLD rows keep the single-window plan (a one-task
-# sort of ~2M longs is cheaper than the bucket machinery it would
-# replace — measured, module docstring).
+# all-or-nothing there).
 SAMPLE_RATE = 211
-BUCKET_THRESHOLD = 2_000_000
 
 
 def _classic_rank(df: DataFrame, keys: list, qcol: str,
@@ -165,50 +156,24 @@ def _bucketed_rank(df: DataFrame, keys: list, qcol: str,
     return out.drop("_bkt", "_ofs", "_wr", "_nxq")
 
 
-def _probe_big_sides(s0: DataFrame, o0: DataFrame, keys: list,
-                     bucket_threshold: int) -> dict:
-    """EXACT max-group-size probe: which side(s) need the bucketed
-    rank.  ≤ 2 rows collected (one per side — the bounded-scalar
-    contract).  Exact, not sampled: a value-hash sample is
-    all-or-nothing per distinct value, so a duplicate-heavy group
-    could be misestimated by up to SAMPLE_RATE× in either direction
-    and pick the wrong rank path (perf only — both paths are exact —
-    but the wrong pick is the 3× regression this probe exists to
-    avoid).  The exact count costs the same single scan (groupBy keys
-    is map-side combined; only groups-cardinality rows shuffle).  The
-    collect makes plan construction eager by design — the adaptive
-    pick IS a driver decision, same contract as unigram's corpus
-    stats."""
-    big = {"s": False, "o": False}
-    probe = (s0.select(F.lit("s").alias("_sd"), *keys)
-             .unionByName(o0.select(F.lit("o").alias("_sd"), *keys))
-             .groupBy("_sd", *keys)
-             .agg(F.count(F.lit(1)).alias("_sc"))
-             .groupBy("_sd").agg(F.max("_sc").alias("_mx")))
-    for r in probe.collect():
-        big[r._sd] = r._mx > bucket_threshold
-    return big
-
-
 def quantile_map(sim: DataFrame, obs: DataFrame, value_col: str,
-                 group_keys, nbuckets: int = 32,
-                 bucket_threshold: int = BUCKET_THRESHOLD) -> DataFrame:
+                 group_keys, nbuckets: int | None = None) -> DataFrame:
     """Map each `sim` row's value onto the observed distribution of
     its group (module docstring).  Both frames need `group_keys` and
     `value_col`; groups present in sim but absent from obs emit NULL
-    mapped values (left join).  `nbuckets` bounds the bucketed path's
-    per-group sort parallelism and `bucket_threshold` the estimated
-    group size past which it engages (exactness is independent of
-    both; pass 0 to force bucketing, a large value to force the
-    classic window).  Returns (keys…, value, p, mapped); row order is
-    unspecified (r16: the former global (keys, value) sort cost a full
-    range exchange of the corpus-sized output — sort at the caller if
-    presentation order matters)."""
+    mapped values (left join).  `nbuckets` names the rank route: None
+    (default) ranks each group in one window, an int ≥ 2 ranks through
+    that many value buckets per group — pass it when groups run past
+    ~2M rows (module docstring).  Both routes emit the same rows.
+    Returns (keys…, value, p, mapped); row order is unspecified (r16:
+    the former global (keys, value) sort cost a full range exchange of
+    the corpus-sized output — sort at the caller if presentation order
+    matters)."""
     keys = list(group_keys)
     if not keys:
         raise ValueError("quantile_map: need at least one group key")
-    if nbuckets < 2:
-        raise ValueError("quantile_map: nbuckets must be >= 2, "
+    if nbuckets is not None and nbuckets < 2:
+        raise ValueError("quantile_map: nbuckets must be None or >= 2, "
                          f"got {nbuckets}")
 
     def q(col):
@@ -218,32 +183,25 @@ def quantile_map(sim: DataFrame, obs: DataFrame, value_col: str,
 
     # r17 (guide §5; the ivfpq-residuals / textrank cache precedent):
     # BOTH narrow quantized projections persist — each side is consumed
-    # 3-6× per query (the path probe, the rank machinery's
-    # sample/count/rank references, the obs count), and broadcast
-    # subtrees re-execute their lineage, so the un-cached plan re-ran
-    # the upstream scan 18× on the bucketed tier (measured; 6× on the
-    # classic tier).  The cache is query-internal scratch of a
-    # 2-3-column projection — at 100 TB that is the narrow relation the
-    # §8 discipline says to iterate on, not the raw corpus.
+    # several times per query (the rank machinery's sample/count/rank
+    # references, the obs count), and broadcast subtrees re-execute
+    # their lineage, so the un-cached plan re-ran the upstream scan 18×
+    # on the bucketed tier (measured; 6× on the classic tier).  The
+    # cache is query-internal scratch of a 2-3-column projection — at
+    # 100 TB that is the narrow relation the §8 discipline says to
+    # iterate on, not the raw corpus.
     s0 = sim.select(*keys, F.col(value_col).alias("value"),
                     q(F.col(value_col)).alias("_qx")).persist()
     o0 = obs.select(*keys, q(F.col(value_col)).alias("_oq")).persist()
 
-    if bucket_threshold <= 0:
-        big = {"s": True, "o": True}
-    else:
-        big = _probe_big_sides(s0, o0, keys, bucket_threshold)
-
-    if big["s"]:
-        s = _bucketed_rank(s0, keys, "_qx", nbuckets, "_i", "_n")
-    else:
+    if nbuckets is None:
         s = _classic_rank(s0, keys, "_qx", "_i", "_n")
-    if big["o"]:
-        o = _bucketed_rank(o0, keys, "_oq", nbuckets, "_j", "_m",
-                           lead_col="_onext")
-    else:
         o = _classic_rank(o0, keys, "_oq", "_j", "_m",
                           lead_col="_onext")
+    else:
+        s = _bucketed_rank(s0, keys, "_qx", nbuckets, "_i", "_n")
+        o = _bucketed_rank(o0, keys, "_oq", nbuckets, "_j", "_m",
+                           lead_col="_onext")
 
     dec = "decimal(38,0)"
     # the group-bounded obs count joins onto sim FIRST (tiny relation,

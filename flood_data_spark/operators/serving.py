@@ -17,7 +17,11 @@ collect.
 
 Boundary semantics match the reference's ``get_grid_cell_bounds``
 (flood-api-examples.py:108-120): a point on a cell edge belongs to the cell
-to its east/north (``floor`` snap).
+to its east/north (``floor`` snap).  The snap floors the quotient
+coord / grid_size after rounding it to 9 decimals, the same rule as
+``functions.keys.grid_index``: the binary quotient of a decimal edge can
+land just below the integer (11.35 / 0.05 = 226.99999999999997), and a
+bare floor would put the point in the cell south/west of the edge.
 """
 
 from __future__ import annotations
@@ -38,8 +42,8 @@ def grid_cell_bounds(lat: float, lon: float,
     108-120)."""
     g = grid_size if grid_size is not None else DEFAULT_CONFIG.resolution
     p = precision if precision is not None else DEFAULT_CONFIG.precision
-    min_lat = math.floor(lat / g) * g
-    min_lon = math.floor(lon / g) * g
+    min_lat = math.floor(round(lat / g, 9)) * g
+    min_lon = math.floor(round(lon / g, 9)) * g
     return (round(min_lat, p), round(min_lat + g, p),
             round(min_lon, p), round(min_lon + g, p))
 

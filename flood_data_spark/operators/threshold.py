@@ -34,64 +34,6 @@ from flood_data_spark.config import DEFAULT_CONFIG
 
 GROUP_KEYS = ("latitude", "longitude", "issued_on", "valid_for", "step")
 
-# --- adaptive exact_impl routing (r17, guide §2.5 skew / §5 buffer
-# pressure; the quantile_map bounded-probe precedent) -----------------
-# The exact percentile aggregate's partial buffer holds every raw value
-# per group, so a planted hot key multiplies per-core buffer/GC pressure
-# for zero parallel gain (driver r16 c8/c32 pair: the skew tier read
-# 11.24 s at 32 cores vs 5.75 s at 8).  _exact_summary_via_ranks is the
-# measured winner on few-huge-groups shapes (r17 same-session A/B on the
-# hot-cell tier: 4.12 s vs 5.15 s at 32 cores, 4.36 vs 5.18 at 8), but
-# LOSES inside long sessions on many-small-groups ensembles (r16: the
-# wide window intermediate).  exact_impl='adaptive' routes by an exact
-# max-group-size probe, bounded three ways:
-#   - PROBE_MIN_BYTES: skip tiny inputs (the probe job's fixed ~0.4 s
-#     scheduling cost exceeds any routing win there);
-#   - PROBE_MAX_KEYS: probe only narrow key tuples — the probe groups by
-#     the raw keys, and re-computing a wide derived key tuple (the 5-key
-#     flood cell grain) over the corpus measured 2.4-4.6 s at the 60M
-#     tier vs ~0.4 s for a single key; wide composite grains are
-#     cell-like many-small-groups shapes where percentile is the right
-#     route anyway;
-#   - RANKS_MIN_GROUP: the hot-group size past which one sorted pass
-#     beats per-value buffers (measured crossover is far below the
-#     planted 1.8M-row hot cell and far above the ≤5.3k ensembles of
-#     the scale ladder, so the constant is uncritical within 10x).
-# The probe is an EXACT groupBy count (map-side combined, only
-# group-cardinality rows shuffle) — the quantile_map lesson: a sampled
-# estimate saves nothing (the cost is fixed job overhead, not data) and
-# can misroute.  Both routes are bit-identical (tests/test_threshold.py),
-# so a "wrong" pick costs performance, never correctness.
-PROBE_MIN_BYTES = 8 * 1024 * 1024
-PROBE_MAX_KEYS = 2
-RANKS_MIN_GROUP = 100_000
-
-
-def _pick_exact_impl(forecast_df: DataFrame, group_keys) -> str:
-    """Bounded shape probe for exact_impl='adaptive': 'ranks' iff the
-    forecast has a group big enough that sorted-window quantiles beat
-    per-value percentile buffers.  Falls back to 'percentile' whenever
-    the probe cannot run cheaply (streaming input, keys not plain
-    forecast columns, wide key tuple, tiny input, stats unavailable)."""
-    keys = list(group_keys)
-    if forecast_df.isStreaming:
-        return "percentile"
-    if len(keys) > PROBE_MAX_KEYS:
-        return "percentile"
-    if not set(keys).issubset(set(forecast_df.columns)):
-        return "percentile"
-    try:
-        est = (forecast_df._jdf.queryExecution().optimizedPlan()
-               .stats().sizeInBytes())
-        if int(est) < PROBE_MIN_BYTES:
-            return "percentile"
-    except Exception:
-        return "percentile"
-    mx = (forecast_df.select(*keys)
-          .groupBy(*keys).agg(F.count(F.lit(1)).alias("_c"))
-          .agg(F.max("_c").alias("_mx")).first()._mx)
-    return "ranks" if (mx or 0) >= RANKS_MIN_GROUP else "percentile"
-
 
 def _quantiles_array(col: str, qs, accuracy_mode: str):
     """All requested quantiles from ONE aggregate buffer: the per-group value
@@ -125,9 +67,13 @@ def _exact_summary_via_ranks(joined: DataFrame, group_keys, value_col: str,
     inside the full bench session (pass-2 x100 17.2 s vs 10.4 s) and inside
     the composed daily pipeline (isolated 5.8 s vs 4.5 s; in-bench 8.2 s vs
     4.4 s), where the percentile aggregate's map-side partial keeps the
-    post-join relation narrow.  Kept selectable via
-    ensemble_threshold_summary(exact_impl="ranks") for shapes with very few
-    very large groups, where one sorted pass beats per-group buffers.
+    post-join relation narrow.  The caller names this route with
+    ensemble_threshold_summary(exact_impl="ranks") when its groups are few
+    and large (past ~100k rows each): percentile's per-value buffer then
+    multiplies per-core buffer/GC pressure for no parallel gain (the r16
+    hot-cell skew tier read 11.24 s at 32 cores vs 5.75 s at 8), and one
+    sorted pass wins (r17 same-session A/B on that tier: 4.12 s vs 5.15 s
+    at 32 cores, 4.36 s vs 5.18 s at 8).
 
     NULL discipline matches F.percentile/min/max (NULLs ignored for the
     summary: ranks are computed against the non-null count with NULLs sorted
@@ -282,33 +228,30 @@ def ensemble_threshold_summary(forecast_df: DataFrame,
                                group_keys=GROUP_KEYS,
                                join_keys=("latitude", "longitude"),
                                value_col: str = "dis24",
-                               exact_impl: str = "adaptive") -> DataFrame:
+                               exact_impl: str = "percentile") -> DataFrame:
     """forecast (1 row per ensemble member) × thresholds → detailed forecast
     (1 row per cell/step) with p_above_Ny and the value 5-number summary.
 
     `join_keys` / `group_keys` / `value_col` default to the flood schema but
-    are configurable so the operator applies to any ensemble-shaped table.
+    are configurable so the operator applies to any ensemble-shaped table;
+    `group_keys` may hold column names or Columns.
 
-    `exact_impl` selects how accuracy_mode='exact' computes the quantiles —
-    'adaptive' (default, r17: a bounded max-group-size probe routes
-    few-huge-groups/skewed shapes to 'ranks' and everything else —
-    including every shape the probe cannot assess cheaply — to
-    'percentile'; see [_pick_exact_impl]), 'percentile' (one
-    ObjectHashAggregate pass, map-side partial, the winner on
-    many-small-groups ensembles) or 'ranks' ([_exact_summary_via_ranks]:
-    one sorted window pass, the winner on few-huge-groups shapes).
-    All impls are bit-identical (pinned in tests/test_threshold.py), so
-    the routing affects performance only.
+    `exact_impl` selects how accuracy_mode='exact' computes the quantiles,
+    and the caller names the route from the shape it knows — building the
+    DataFrame fires no job:
+    - 'percentile' (default): one ObjectHashAggregate pass with a map-side
+      partial, the winner on many small groups such as the flood grain
+      (~51 members per cell/step);
+    - 'ranks' ([_exact_summary_via_ranks]): one sorted window pass, the
+      winner on a few groups past ~100k rows each.
+    Both routes are bit-identical (pinned in tests/test_threshold.py), so
+    the choice affects performance only.
     """
     if accuracy_mode not in ("approx", "exact"):
         raise ValueError("accuracy_mode must be 'approx' or 'exact'")
-    if exact_impl not in ("percentile", "ranks", "adaptive"):
-        raise ValueError(
-            "exact_impl must be 'percentile', 'ranks' or 'adaptive'")
+    if exact_impl not in ("percentile", "ranks"):
+        raise ValueError("exact_impl must be 'percentile' or 'ranks'")
     years = threshold_years or DEFAULT_CONFIG.threshold_years
-
-    if accuracy_mode == "exact" and exact_impl == "adaptive":
-        exact_impl = _pick_exact_impl(forecast_df, group_keys)
 
     rhs = F.broadcast(threshold_df) if broadcast_thresholds else threshold_df
     joined = forecast_df.join(rhs, on=list(join_keys), how="left")

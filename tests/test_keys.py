@@ -44,3 +44,17 @@ def test_grid_index_matches_across_float_noise(spark):
         .withColumn("longitude", F.lit(0.025))
     out = with_grid_index(df).select("g_lat").distinct()
     assert out.count() == 1
+
+
+def test_grid_index_edge_points_snap_east_north(spark):
+    # an edge point belongs to the cell east/north of the edge, also where
+    # the binary quotient lands just below the integer (11.35 / 0.05 =
+    # 226.99999999999997, 0.15 / 0.05 = 2.9999999999999996); cell centers
+    # and interior points keep their floor
+    cases = [(11.35, 227), (0.15, 3), (0.25, 5), (0.10, 2), (0.0, 0),
+             (0.025, 0), (11.375, 227), (-0.05, -1), (-5.8, -116),
+             (-5.81, -117), (0.0499, 0)]
+    df = spark.createDataFrame([(v, 0.0) for v, _ in cases],
+                               "latitude double, longitude double")
+    got = [r.g_lat for r in with_grid_index(df).collect()]
+    assert got == [want for _, want in cases]

@@ -118,14 +118,14 @@ def test_seasonal_mk_pair_free_group_surfaces(spark):
     assert out[2].trend == "increasing"
 
 
-# --- quantile_map adaptive bucketed rank (VERDICT r14 #3) --------------------
+# --- quantile_map bucketed rank (VERDICT r14 #3) -----------------------------
 
 
 def test_quantile_map_bucketed_equals_classic(spark):
     from flood_data_spark.operators.postprocess import quantile_map
 
     # ties, NULLs, a sim-only group, a single-obs group — the bucketed
-    # path (bucket_threshold=0 forces it) must emit the identical
+    # path (nbuckets=32 names it) must emit the identical
     # multiset as the classic single-window plan.
     sim = spark.range(4000).select(
         (F.col("id") % 3).alias("grp"),
@@ -146,14 +146,10 @@ def test_quantile_map_bucketed_equals_classic(spark):
                         r.mapped if r.mapped is not None
                         else float("-inf")) for r in rows))
 
-    classic = key(quantile_map(sim, obs, "v", ["grp"],
-                               bucket_threshold=10**12).collect())
+    classic = key(quantile_map(sim, obs, "v", ["grp"]).collect())
     bucketed = key(quantile_map(sim, obs, "v", ["grp"],
-                                bucket_threshold=0).collect())
+                                nbuckets=32).collect())
     assert classic == bucketed
-    # and the probe-driven default agrees too (small data -> classic)
-    auto = key(quantile_map(sim, obs, "v", ["grp"]).collect())
-    assert auto == classic
 
 
 def test_quantile_map_bucketed_partition_invariant(spark):
@@ -167,11 +163,11 @@ def test_quantile_map_bucketed_partition_invariant(spark):
         (F.col("id") % 67).cast("double").alias("v"))
     base = sorted((r.grp, r.value, r.p, r.mapped) for r in
                   quantile_map(sim, obs, "v", ["grp"],
-                               bucket_threshold=0).collect())
+                               nbuckets=32).collect())
     pert = sorted((r.grp, r.value, r.p, r.mapped) for r in
                   quantile_map(sim.repartition(13),
                                obs.repartition(5), "v", ["grp"],
-                               bucket_threshold=0).collect())
+                               nbuckets=32).collect())
     assert base == pert
 
 

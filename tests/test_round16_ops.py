@@ -119,25 +119,7 @@ def test_alert_triggers_dup_leads_dont_bridge_gaps(spark):
         [(5, 5, 1), (7, 8, 2)]
 
 
-# --- ADVICE fix 4: quantile_map probe is exact -------------------------------
-
-
-def test_quantile_map_probe_exact_on_duplicate_heavy_group(spark):
-    """The old value-hash sample was all-or-nothing per distinct
-    value: a duplicate-heavy group misestimated by up to 211x.  The
-    probe now counts exactly."""
-    from flood_data_spark.operators.postprocess import _probe_big_sides
-
-    # one group, ONE distinct value repeated 500 times: the value-hash
-    # sample would have reported 0 or 500*211 depending on the hash
-    s0 = spark.range(500).select(F.lit(1).alias("grp"),
-                                 F.lit(42).alias("_qx"))
-    o0 = spark.range(3).select(F.lit(1).alias("grp"),
-                               F.lit(7).alias("_oq"))
-    big = _probe_big_sides(s0, o0, ["grp"], bucket_threshold=499)
-    assert big == {"s": True, "o": False}
-    big = _probe_big_sides(s0, o0, ["grp"], bucket_threshold=500)
-    assert big == {"s": False, "o": False}
+# --- quantile_map duplicate-heavy groups ------------------------------------
 
 
 def test_quantile_map_duplicate_heavy_exact_both_paths(spark):
@@ -153,13 +135,10 @@ def test_quantile_map_duplicate_heavy_exact_both_paths(spark):
                        None if r.mapped is None else round(r.mapped, 9))
                       for r in rows)
 
-    classic = key(quantile_map(sim, obs, "v", ["grp"],
-                               bucket_threshold=10**12).collect())
-    forced = key(quantile_map(sim, obs, "v", ["grp"],
-                              bucket_threshold=0).collect())
-    auto = key(quantile_map(sim, obs, "v", ["grp"],
-                            bucket_threshold=20).collect())
-    assert classic == forced == auto
+    classic = key(quantile_map(sim, obs, "v", ["grp"]).collect())
+    bucketed = key(quantile_map(sim, obs, "v", ["grp"],
+                                nbuckets=32).collect())
+    assert classic == bucketed
 
 
 # --- polygon_membership (VERDICT r15 #4: the last J8 gap) --------------------

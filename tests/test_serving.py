@@ -37,11 +37,30 @@ def test_point_lookup_single_cell(spark):
     assert got[0].val == 502.0
 
 
+def _cells_around(spark, lat, lon):
+    # 4 x 4 cell centers at 0.05 resolution around (lat, lon)
+    i0, j0 = round(lat / 0.05) - 2, round(lon / 0.05) - 2
+    rows = [(round((i0 + i) * 0.05 + 0.025, 3),
+             round((j0 + j) * 0.05 + 0.025, 3))
+            for i in range(4) for j in range(4)]
+    return spark.createDataFrame(rows, "latitude double, longitude double")
+
+
 def test_point_on_boundary_snaps_east_north(spark):
     cells = _cells(spark)
     got = point_lookup(cells, 0.25, 0.10).collect()
     assert len(got) == 1
     assert (got[0].latitude, got[0].longitude) == (0.275, 0.125)
+    # edges whose binary quotient lands just below the integer:
+    # 11.35 / 0.05 = 226.99999999999997 and 0.15 / 0.05 = 2.9999999999999996
+    for lat, lon, want in [(11.35, 0.15, (11.375, 0.175)),
+                           (0.15, 11.35, (0.175, 11.375))]:
+        assert grid_cell_bounds(lat, lon) == (
+            round(want[0] - 0.025, 3), round(want[0] + 0.025, 3),
+            round(want[1] - 0.025, 3), round(want[1] + 0.025, 3))
+        got = point_lookup(_cells_around(spark, lat, lon),
+                           lat, lon).collect()
+        assert [(r.latitude, r.longitude) for r in got] == [want]
 
 
 def test_neighborhood_3x3_with_primary_flag(spark):

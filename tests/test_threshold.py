@@ -158,59 +158,11 @@ def test_exact_rank_path_matches_percentile_bitwise(spark):
     assert dflt.schema == old.schema
     assert dflt.exceptAll(old).count() == 0
     assert old.exceptAll(dflt).count() == 0
-
-
-def test_adaptive_routing_picks_by_shape(spark, monkeypatch):
-    """r17: exact_impl='adaptive' routes via the bounded max-group-size
-    probe — ranks for a hot-group shape, percentile otherwise — and
-    falls back to percentile whenever the probe is gated off (tiny
-    input, wide key tuple, keys not plain forecast columns)."""
-    from pyspark.sql import functions as F
-
-    import flood_data_spark.operators.threshold as T
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    fc = spark.range(2000).select(
-        F.when(F.col("id") % 2 == 0, F.lit(0))
-        .otherwise(F.col("id")).alias("partkey"),
-        (F.col("id") % 97).cast("double").alias("dis24"))
-    thr = spark.createDataFrame(
-        [(0, 10.0, 20.0, 30.0)],
-        "partkey long, threshold_2y double, threshold_5y double, "
-        "threshold_20y double")
-
-    # probe armed (no size gate) + hot group (1000 rows of key 0
-    # >= RANKS_MIN_GROUP=100): routes to the window formulation
-    monkeypatch.setattr(T, "PROBE_MIN_BYTES", 0)
-    monkeypatch.setattr(T, "RANKS_MIN_GROUP", 100)
-    hot = T.ensemble_threshold_summary(
-        fc, thr, accuracy_mode="exact",
-        join_keys=("partkey",), group_keys=("partkey",))
-    assert "Window" in plan(hot)
-
-    # same frame, hot-group floor above the max group size: percentile
-    monkeypatch.setattr(T, "RANKS_MIN_GROUP", 10_000)
-    cold = T.ensemble_threshold_summary(
-        fc, thr, accuracy_mode="exact",
-        join_keys=("partkey",), group_keys=("partkey",))
-    assert "Window" not in plan(cold)
-    assert "percentile" in plan(cold)
-
-    # size gate: a tiny input never probes (routes percentile even with
-    # the hot-group floor back at 100)
-    monkeypatch.setattr(T, "RANKS_MIN_GROUP", 100)
-    monkeypatch.setattr(T, "PROBE_MIN_BYTES", 1 << 40)
-    gated = T.ensemble_threshold_summary(
-        fc, thr, accuracy_mode="exact",
-        join_keys=("partkey",), group_keys=("partkey",))
-    assert "Window" not in plan(gated)
-
-    # wide key tuples never probe (the flood 5-key grain)
-    monkeypatch.setattr(T, "PROBE_MIN_BYTES", 0)
-    monkeypatch.setattr(T, "PROBE_MAX_KEYS", 0)
-    wide = T.ensemble_threshold_summary(
-        fc, thr, accuracy_mode="exact",
-        join_keys=("partkey",), group_keys=("partkey",))
-    assert "Window" not in plan(wide)
+    # Column group keys are one more input, on both named routes
+    for impl in ("percentile", "ranks"):
+        by_col = ensemble_threshold_summary(
+            fc, thr, accuracy_mode="exact",
+            group_keys=[F.col(k) for k in gk], exact_impl=impl)
+        assert by_col.schema == old.schema, impl
+        assert by_col.exceptAll(old).count() == 0, impl
+        assert old.exceptAll(by_col).count() == 0, impl
