@@ -1,23 +1,40 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark harness: timed entries at $SPARK_GRAFT_SF_DIR (default sf0.1)
+on local[nproc], in one Spark session sized for the box it runs on.
 
-Each query runs once, cold (timings include planning + execution), matching
-how the daily pipeline actually runs — single-shot batch jobs.  Results are
-materialized through the noop sink so every projected column is computed.
+    python bench.py                          # the 180-entry headline set
+    python bench.py --only q1 q_crps_x10     # named entries, in isolation
+    python bench.py --explain plans/ ...     # + each entry's formatted plan
+    python bench.py --profile ...            # + jobs/tasks/shuffle/spill/GC
+    python bench.py --stress                 # bench_stress.py's decade tiers
+    python bench.py --skew                   # the skew-join variant table
+
+Every entry is built and materialized through the noop sink (timings
+include planning + execution) once per pass; an entry records the min over
+SPARK_GRAFT_BENCH_PASSES interleaved passes (default 2; SKEW_BENCH_RUNS,
+default 3, for --skew).  SPARK_GRAFT_BENCH_PASSES=0 builds (and with
+--explain, explains) every entry without executing it.  The last stdout
+line is the JSON payload, every entry's timing included; a full run also
+writes it to BENCH_LOCAL.json (--stress: BENCH_STRESS.json), and BENCH_OUT
+names the file for any run.  Generated tiers, shuffle, spill and scratch
+live under .bench_scale/ in the checkout (shuffle under SPARK_LOCAL_DIRS
+when that is set).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+WORK = os.path.join(REPO, ".bench_scale")
 
 
 def _src_fingerprint(path: str) -> str:
@@ -472,13 +489,17 @@ def _q_ts_pattern_full(spark, sf_dir):
                         value_col="value", k=10)
 
 
-def _scaled_lineitem_path(spark, sf_dir):
+def _scaled_lineitem_path(spark, sf_dir, factor=10):
     """Materialize (once, cached on disk across rounds) a deterministic
-    10x lineitem: each source row replicated with perturbed price/discount
-    so group counts, value distributions, and percentile buffers all see
-    10x volume.  Kept OUT of the timed region — the tier measures the
-    flagship plans, not synthetic-data generation (the skew-bench lesson:
-    a generation-dominated pair shows no plan signal)."""
+    `factor`x lineitem (10 or 100): each source row replicated with
+    perturbed price/discount so group counts, value distributions, and
+    percentile buffers all see `factor`x volume; replicas are NEW orders,
+    not longer ones (the 100 TB growth mode is more cells).  Kept OUT of
+    the timed region — the tier measures the flagship plans, not
+    synthetic-data generation (the skew-bench lesson: a
+    generation-dominated pair shows no plan signal).  The x100 tier (60M
+    rows at sf0.1) proves the flagship's one-broadcast-one-exchange shape
+    stays sublinear across TWO decades (x1 → x10 → x100)."""
     from pyspark.sql import functions as F
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     # _p32 suffix: the first recording wrote ONE 82 MB single-row-group
@@ -487,28 +508,22 @@ def _scaled_lineitem_path(spark, sf_dir):
     # measured ~17% CPU).  32 files = 32 scan tasks, the layout a real
     # ingest would produce.
     fp = _src_fingerprint(f"{sf_dir}/lineitem.parquet")
-    out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                       ".bench_scale", f"lineitem_x10_{sf_tag}_p32_{fp}")
+    out = os.path.join(WORK, f"lineitem_x{factor}_{sf_tag}_p32_{fp}")
     _evict_stale_tiers(out)
-    # drop the pre-_p32 single-file generation if this box still has one
-    legacy = out.rsplit("_p32", 1)[0]
-    if os.path.isdir(legacy):
-        import shutil
-        shutil.rmtree(legacy, ignore_errors=True)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        mid = (factor - 1) / 2          # replica offsets centred on 0
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").repartition(32)
-        (li.withColumn("_r", F.explode(F.sequence(F.lit(0), F.lit(9))))
+        (li.withColumn("_r", F.explode(F.sequence(F.lit(0),
+                                                  F.lit(factor - 1))))
          .withColumn("l_extendedprice",
                      F.col("l_extendedprice")
-                     * (1.0 + (F.col("_r") - 4.5) / 100.0))
+                     * (1.0 + (F.col("_r") - mid) / (10.0 * factor)))
          .withColumn("l_discount",
                      F.least(F.lit(0.1),
                              F.abs(F.col("l_discount")
-                                   + (F.col("_r") - 4.5) / 1000.0)))
-         # 10x distinct groups for the window query: replicas are NEW
-         # orders, not longer ones (the 100 TB growth mode is more cells)
-         .withColumn("l_orderkey",
-                     F.col("l_orderkey") * 16 + F.col("_r"))
+                                   + (F.col("_r") - mid) / (100.0 * factor))))
+         .withColumn("l_orderkey", F.col("l_orderkey")
+                     * (16 if factor == 10 else 128) + F.col("_r"))
          .drop("_r")
          .write.mode("overwrite").parquet(out))
     return out
@@ -578,36 +593,6 @@ def _q_threshold_summary_skew_approx(spark, sf_dir):
         group_keys=("partkey",))
 
 
-def _scaled_lineitem_path_x100(spark, sf_dir):
-    """The second decade: a deterministic 100x lineitem (60M rows at
-    sf0.1), materialized once off the timed path exactly like the x10
-    tier (same perturbation scheme, 0..99 replica index, 32 files).
-    Exists to prove the flagship's one-broadcast-one-exchange shape
-    stays sublinear across TWO decades (x1 → x10 → x100) — the closest
-    a 32-core box gets to the 100 TB growth mode."""
-    from pyspark.sql import functions as F
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = _src_fingerprint(f"{sf_dir}/lineitem.parquet")
-    out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                       ".bench_scale", f"lineitem_x100_{sf_tag}_p32_{fp}")
-    _evict_stale_tiers(out)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").repartition(32)
-        (li.withColumn("_r", F.explode(F.sequence(F.lit(0), F.lit(99))))
-         .withColumn("l_extendedprice",
-                     F.col("l_extendedprice")
-                     * (1.0 + (F.col("_r") - 49.5) / 1000.0))
-         .withColumn("l_discount",
-                     F.least(F.lit(0.1),
-                             F.abs(F.col("l_discount")
-                                   + (F.col("_r") - 49.5) / 10000.0)))
-         .withColumn("l_orderkey",
-                     F.col("l_orderkey") * 128 + F.col("_r"))
-         .drop("_r")
-         .write.mode("overwrite").parquet(out))
-    return out
-
-
 def _q_threshold_summary_x100(spark, sf_dir):
     """Flagship exceedance + exact 5-number summary on the 60M-row tier:
     IDENTICAL plan to q_threshold_summary / _x10 (broadcast threshold
@@ -620,7 +605,7 @@ def _q_threshold_summary_x100(spark, sf_dir):
     from pyspark.sql import functions as F
     import __spark_entry__ as entry_mod
     from flood_data_spark.operators.threshold import ensemble_threshold_summary
-    forecast = spark.read.parquet(_scaled_lineitem_path_x100(spark, sf_dir)) \
+    forecast = spark.read.parquet(_scaled_lineitem_path(spark, sf_dir, 100)) \
         .select(F.col("l_partkey").alias("partkey"),
                 F.col("l_extendedprice").alias("dis24"))
     thresholds = entry_mod._thresholds(spark, sf_dir)
@@ -686,7 +671,7 @@ def _q_daily_pipeline_x100(spark, sf_dir):
     from pyspark.sql import functions as F
     from flood_data_spark.plans.daily_pipeline import DailyForecastPipeline
 
-    li = spark.read.parquet(_scaled_lineitem_path_x100(spark, sf_dir))
+    li = spark.read.parquet(_scaled_lineitem_path(spark, sf_dir, 100))
     lat = F.round(F.lit(0.025) + (F.col("l_partkey") % 200) * 0.05, 3)
     lon = F.round(F.lit(0.025)
                   + ((F.col("l_partkey") / 200).cast("long") % 200) * 0.05,
@@ -761,15 +746,14 @@ def _q_daily_incremental_x10(spark, sf_dir):
     # disjoint day slices — value-identical to two per-day runs) and
     # publish as one upsert, OVERLAPPED with the independent stale-d2
     # publish (guide §2.6; disjoint partitions, per-job staging dirs).
-    # Store on tmpfs like the registry twin's _scratch_dir (r15 lesson:
-    # /tmp measures this box's 62 MB/s virtio, not the operator).
+    # The store is scratch under WORK, with the harness's shuffle files.
     base_days = ensemble_threshold_summary(
         fc.filter(F.col("day").isin("d0", "d1")),
         thresholds, accuracy_mode="exact",
         join_keys=("partkey",), group_keys=("day", "partkey"))
 
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    store = tempfile.mkdtemp(prefix="bench_daily_store_", dir=shm)
+    store = tempfile.mkdtemp(prefix="bench_daily_store_",
+                             dir=os.path.join(WORK, "tmp"))
     try:
         from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(max_workers=2) as pool:
@@ -918,8 +902,7 @@ def _scaled_documents_path(spark, sf_dir):
     from pyspark.sql import functions as F
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     fp = _src_fingerprint(f"{sf_dir}/documents.parquet")
-    out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                       ".bench_scale", f"documents_x10_{sf_tag}_p16_{fp}")
+    out = os.path.join(WORK, f"documents_x10_{sf_tag}_p16_{fp}")
     _evict_stale_tiers(out)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
@@ -975,8 +958,7 @@ def _scaled_events_path(spark, sf_dir):
     import __spark_entry__ as entry_mod
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     fp = _src_fingerprint(f"{sf_dir}/events.parquet")
-    out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                       ".bench_scale", f"events_x10_{sf_tag}_p16_{fp}")
+    out = os.path.join(WORK, f"events_x10_{sf_tag}_p16_{fp}")
     _evict_stale_tiers(out)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         ev = entry_mod._t(spark, sf_dir, "events").repartition(16)
@@ -1265,80 +1247,127 @@ EXTRA_QUERIES = {
 }
 
 
-def main():
+# --skew: plans.scale.salted_join vs a plain shuffle join on a planted-skew
+# key, next to AQE's skew-join splitter at default and at data-sized
+# thresholds.  Kept out of the headline set: single shots of the pair are
+# bimodal near the GC/spill boundary, so it records min and median over
+# SKEW_BENCH_RUNS passes.  Shape (calibrated on local[32], 8 GiB heap; see
+# docs/SCALE_NOTES.md): a range-generated 30M-row large side with 90% of
+# rows on key 0 (a near-free map side, so wall time isolates the
+# reduce-side straggler) against 250k small-side keys, broadcast off.
+# AQE stays on in every variant; only its skew splitter toggles.  At
+# default thresholds the splitter does not fire: the hot partition is
+# narrow longs that compress under 256 MB.
+SKEW_ROWS, SKEW_KEYS, SKEW_SALT = 30_000_000, 250_000, 16
+
+
+def _skew_variant(skew_on: bool, tuned: bool, salted: bool = False):
+    def build(spark, sf_dir):
+        from pyspark.sql import functions as F
+        from flood_data_spark.plans.scale import salted_join
+        for key, value in (
+                ("autoBroadcastJoinThreshold", "-1"),
+                ("adaptive.skewJoin.enabled", str(skew_on).lower()),
+                ("adaptive.skewJoin.skewedPartitionFactor",
+                 "2" if tuned else "5"),
+                ("adaptive.skewJoin.skewedPartitionThresholdInBytes",
+                 "16m" if tuned else "256m"),
+                ("adaptive.advisoryPartitionSizeInBytes",
+                 "16m" if tuned else "64m")):
+            spark.conf.set("spark.sql." + key, value)
+        big = spark.range(SKEW_ROWS).select(
+            F.when(F.col("id") % 10 < 9, F.lit(0))
+            .otherwise(F.col("id") % SKEW_KEYS).alias("k"),
+            (F.col("id") * 3).alias("payload"))
+        small = spark.range(SKEW_KEYS).select(
+            F.col("id").alias("k"), (F.col("id") % 97).alias("tag"))
+        if salted:
+            return salted_join(big, small, "k", salt_buckets=SKEW_SALT)
+        return big.join(small, "k")
+    return build
+
+
+SKEW_QUERIES = {
+    "plain": _skew_variant(False, False),
+    "aqe_default": _skew_variant(True, False),
+    "aqe_tuned": _skew_variant(True, True),
+    "salted": _skew_variant(False, False, salted=True),
+}
+
+# mode: (payload metric, default artifact, band file)
+MODES = {
+    "main": ("headline_queries_total_runtime", "BENCH_LOCAL.json",
+             "BENCH_BANDS.json"),
+    "stress": ("scale_stress_total_runtime", "BENCH_STRESS.json",
+               "BENCH_STRESS_BANDS.json"),
+    "skew": ("skew_join", None, None),
+}
+
+# persisted-index entries: clearing the cache after them would unpersist
+# the index their probe entry is documented to reuse, folding the build
+# back into the "pure search" probe timing
+KEEP_CACHE_AFTER = {"q_ivf_build", "q_bm25_index_build",
+                    "q_ivf_build_x10tier", "q_ivf_build_x100tier"}
+
+
+def resolve(mode: str, names=None) -> dict:
+    """name -> fn(spark, sf_dir) -> DataFrame for `names` (default: the
+    mode's whole set, in run order).  Main-mode names may be any registry
+    query or EXTRA_QUERIES entry."""
+    if mode == "stress":
+        import bench_stress
+        table = bench_stress.STRESS_QUERIES
+    elif mode == "skew":
+        table = SKEW_QUERIES
+    else:
+        import __spark_entry__ as entry_mod
+        table = {**EXTRA_QUERIES, **entry_mod.queries()}
+    names = names or (BENCH_QUERIES if mode == "main" else list(table))
+    unknown = [n for n in names if n not in table]
+    if unknown:
+        raise SystemExit(f"unknown {mode} entries: {', '.join(unknown)}")
+    return {n: table[n] for n in names}
+
+
+def session_posture(mem_bytes: int, cpus: int) -> dict:
+    """Spark conf for one harness session on a box with `mem_bytes` of
+    physical memory and `cpus` task threads.
+
+    The driver heap is half the box, capped so that 256 MB per task
+    thread (its Python worker) and 2 GB (the JVM's off-heap memory and the
+    OS) stay free, and never under a quarter of the box.  It is not
+    pre-sized, so a small run does not hold it.  Shuffle, spill, JVM temp files and the
+    warehouse live under WORK in the checkout (shuffle under
+    SPARK_LOCAL_DIRS when that is set), never on a tmpfs, which takes its
+    pages from the same memory as the heap."""
+    mem_mb = mem_bytes >> 20
+    heap_mb = max(mem_mb // 4,
+                  min(mem_mb // 2, mem_mb - 256 * cpus - 2048))
+    return {
+        "spark.driver.memory": f"{heap_mb}m",
+        "spark.local.dir": (os.environ.get("SPARK_LOCAL_DIRS")
+                            or os.path.join(WORK, "spark-local")),
+        "spark.sql.warehouse.dir": os.path.join(WORK, "warehouse"),
+        "spark.driver.extraJavaOptions": (
+            f"-XX:-UsePerfData -Djava.io.tmpdir={WORK}/tmp "
+            f"-Dderby.system.home={WORK}"),
+    }
+
+
+def _warm_up(spark) -> None:
+    """Untimed warm-up shared by every mode: a long-running cluster has
+    these classes loaded and JIT-ed long before any daily batch, so
+    first-use class loading and code generation belong to no entry."""
     import __spark_entry__ as entry_mod
-    from flood_data_spark.session import get_spark
-
-    # 16g heap for the 38-entry single-JVM session: at the default 8g the
-    # tail entries read up to 2.6x slower from accumulated broadcast/cache
-    # garbage (measured: q_threshold_summary_x10 16.5 s at the tail vs
-    # 6.3 s isolated) — a cluster sizes executor memory to the workload;
-    # the bench should measure plans, not an undersized collector
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
-    # -Xms == -Xmx: a long-running cluster executor runs with a
-    # pre-sized heap (the standard Spark deployment setting); without
-    # it the FIRST heavy query pays ~20-25 s of incremental heap
-    # expansion + ergonomic full GCs (measured on the x100 flagship:
-    # 32-35 s first execution vs 6.9-7 s once the heap is grown,
-    # page cache held constant) — a one-time JVM cost that belongs to
-    # session startup, not to whichever query runs first.
-    # shuffle on tmpfs: this box's virtio disk WRITES at ~62 MB/s
-    # (reads 3.1 GB/s — measured), so any exact-percentile / wide
-    # aggregation that shuffles ~GBs measures the virtual write path,
-    # not the plan (forensics: x100 flagship 6.9 -> 13-35 s across one
-    # afternoon at 99% CPU idle, 0.6% steal, input fully cached; a
-    # 512 MB fsync'd write test read 62 MB/s).  A production executor
-    # shuffles to local NVMe at GB/s — /dev/shm (1.8 GB/s measured,
-    # 126 GB) is the closest local stand-in, so the bench measures
-    # plan cost with cluster-shaped I/O.
-    extra = {"spark.driver.extraJavaOptions": "-Xms16g"}
-    if os.path.isdir("/dev/shm"):
-        shm_dir = "/dev/shm/spark-bench-local"
-        os.makedirs(shm_dir, exist_ok=True)
-        extra["spark.local.dir"] = shm_dir
-    spark = get_spark(app_name="bench", extra_conf=extra)
-    qs = entry_mod.queries()
-
-    # trigger JVM + parquet footer + noop-sink warm-up outside the timed
-    # region (the first noop write otherwise pays one-time codegen setup)
+    from pyspark.sql import Window, functions as F
+    from flood_data_spark.datapipe.bpe import bpe_train
+    from flood_data_spark.operators.threshold import (
+        ensemble_threshold_summary)
+    # JVM + parquet footer + noop sink
     spark.read.parquet(f"{SF_DIR}/region.parquet") \
         .write.format("noop").mode("overwrite").save()
-    # materialize the 10x tier inputs before any timing starts
-    _scaled_lineitem_path(spark, SF_DIR)
-    _scaled_documents_path(spark, SF_DIR)
-    _scaled_events_path(spark, SF_DIR)
-
-    def _warm_page_cache():
-        # pre-touch the tier bytes into the OS page cache (outside
-        # every timed region): the x100 entry runs FIRST in each pass
-        # (the JVM-aging mitigation) and is a 60M-row scan, so on a
-        # cold cache it measures the DISK, not the plan — observed
-        # 6.9 / 13.5 / 35.2 s for the identical plan across one
-        # afternoon purely from cache state (this box reclaims the
-        # page cache down to ~2 GB, so warmth decays fast).  A
-        # long-running cluster reads a tier it just wrote (or holds
-        # it in the buffer/HDFS cache), same argument as the JIT
-        # warmup above; re-run at the START OF EACH PASS so the
-        # band file tracks plan cost, not eviction timing.
-        # x100 last: it is the biggest tier AND the first timed entry,
-        # so it must still be resident when the pass starts
-        for tier_path in (SF_DIR,
-                          _scaled_documents_path(spark, SF_DIR),
-                          _scaled_events_path(spark, SF_DIR),
-                          _scaled_lineitem_path(spark, SF_DIR),
-                          _scaled_lineitem_path_x100(spark, SF_DIR)):
-            if os.path.isdir(tier_path):
-                for root_dir, _dirs, files in os.walk(tier_path):
-                    for f in files:
-                        with open(os.path.join(root_dir, f),
-                                  "rb") as fh:
-                            while fh.read(1 << 24):
-                                pass
-    # prime the heavyweight operator classes (ObjectHashAggregate percentile
-    # buffers, window exec, broadcast exchange) on a 100-row synthetic frame:
-    # a long-running cluster has these JIT-ed long before any daily batch,
-    # so first-use class-load/codegen (~2-3 s) doesn't belong to any query
-    from pyspark.sql import Window, functions as F
+    # ObjectHashAggregate percentile buffers, window exec and broadcast
+    # exchange on a 100-row frame (~2-3 s of first use)
     warm = spark.range(100).select(
         (F.col("id") % 10).alias("k"), F.rand(7).alias("v"))
     (warm.join(F.broadcast(spark.range(10).withColumnRenamed("id", "k")), "k")
@@ -1349,209 +1378,242 @@ def main():
      .withColumn("rn", F.row_number().over(
          Window.partitionBy(F.lit(1)).orderBy("k")))
      .write.format("noop").mode("overwrite").save())
-    # prime the higher-order-function codegen path (aggregate folds,
-    # transform lambdas) on a 2-row frame: first use costs ~15-20 s of
-    # class-load/JIT that a long-running cluster pays once at deploy,
-    # not inside any daily job (same argument as the block above)
-    from flood_data_spark.datapipe.bpe import bpe_train as _warm_bpe
-    _warm_bpe(spark.createDataFrame([(0, "ab ab"), (1, "cd")],
+    # higher-order-function codegen (aggregate folds, transform lambdas)
+    # on a 2-row frame: ~15-20 s of class loading and JIT on first use
+    bpe_train(spark.createDataFrame([(0, "ab ab"), (1, "cd")],
                                     "doc_id long, text string"),
               n_merges=1)[1].write.format("noop").mode("overwrite").save()
-    # r17 (VERDICT r16 #2, cold-swing root cause): the x100 flagship's
-    # 26-97 s cold pass-1 is JIT compilation of the query's OWN generated
-    # classes — measured 19-23 s of compiler time during an 8.5-13.5 s
-    # cold pass (GC ≤ 0.6 s, heap pre-sized), progressive across passes,
-    # wall impact amplified when compiler threads contend with 32 busy
-    # task threads.  The generic 100-row warmup above cannot help: Spark's
-    # codegen cache keys on generated SOURCE, so only the IDENTICAL
-    # expression shape reuses (and therefore pre-JITs) the entry's
-    # classes.  Running the flagship summary shape once on the x1
-    # lineitem (~2 s, outside every timed region — the same "a
-    # long-running cluster has these JIT-ed long before any daily batch"
-    # argument as the blocks above) measured cold pass-1 8.5-13.5 s →
-    # 6.9-8.0 s across 3 fresh JVMs (JIT 20-23 s → 11 s) and tightens the
-    # cold spread to ≤1.2x.  Both exact routes are warmed (percentile:
-    # the x10/x100 entries; ranks: the route the skew entry names).
-    from flood_data_spark.operators.threshold import (
-        ensemble_threshold_summary as _warm_ets)
-    _warm_fc = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
+    # the flagship summary shape itself, on the x1 lineitem, both exact
+    # routes.  Spark's codegen cache keys on generated source, so only the
+    # identical expression shape pre-JITs the flagship entries' classes:
+    # measured at r17, cold pass 1 of the x100 flagship 8.5-13.5 s ->
+    # 6.9-8.0 s over 3 fresh JVMs (JIT 20-23 s -> 11 s)
+    fc = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         F.col("l_partkey").alias("partkey"),
         F.col("l_extendedprice").alias("dis24"))
-    for _impl in ("percentile", "ranks"):
-        _warm_ets(_warm_fc, entry_mod._thresholds(spark, SF_DIR),
-                  accuracy_mode="exact", join_keys=("partkey",),
-                  group_keys=("partkey",), exact_impl=_impl) \
-            .write.format("noop").mode("overwrite").save()
+    for impl in ("percentile", "ranks"):
+        ensemble_threshold_summary(
+            fc, entry_mod._thresholds(spark, SF_DIR), accuracy_mode="exact",
+            join_keys=("partkey",), group_keys=("partkey",),
+            exact_impl=impl).write.format("noop").mode("overwrite").save()
+
+
+def _tiers(mode: str, spark) -> list:
+    """Generate the mode's scaled inputs (once; cached under WORK across
+    runs) and return their paths.  Largest last: it must still be in the
+    page cache when a pass starts."""
+    if mode == "main":
+        return [_scaled_documents_path(spark, SF_DIR),
+                _scaled_events_path(spark, SF_DIR),
+                _scaled_lineitem_path(spark, SF_DIR),
+                _scaled_lineitem_path(spark, SF_DIR, 100)]
+    if mode == "stress":
+        import bench_stress as bs
+        return [*bs._patho_paths(spark), bs._documents_x100_path(spark),
+                bs._embeddings_x100_path(spark),
+                bs._lineitem_x1000_path(spark)]
+    return []
+
+
+def _warm_page_cache(paths) -> None:
+    """Read every input file once, outside the timed region, at the start
+    of each pass.  On a cold cache the first big-tier entry measures the
+    disk, not the plan (x100 flagship: 6.9 / 13.5 / 35.2 s for one plan
+    across one afternoon, from cache state alone)."""
+    for path in paths:
+        for root_dir, _dirs, files in os.walk(path):
+            for f in files:
+                with open(os.path.join(root_dir, f), "rb") as fh:
+                    while fh.read(1 << 24):
+                        pass
+
+
+def _check_bands(path: str, cpus: int, timings: dict, cold: dict) -> list:
+    """Append this run's readings to the band history kept for this CPU
+    count (bounded at 8) and return the entries reading > 2x their best
+    there: the alarm fires at bench time, not a review later.  Pass-1
+    readings of the cold-tracked entries are banded as <name>__cold."""
+    all_bands = {}
+    if os.path.exists(path):
+        with open(path) as fh:
+            all_bands = json.load(fh)
+    bands = all_bands.setdefault(str(cpus), {})
+    exits = []
+    for key, dt in [*((n + "__cold", v) for n, v in cold.items()),
+                    *timings.items()]:
+        hist = [v for v in bands.get(key, []) if isinstance(v, (int, float))]
+        if hist and dt > 2 * min(hist):
+            exits.append(key)
+            print(f"# BAND EXIT: {key} {dt:.2f}s > 2x best {min(hist):.2f}s "
+                  f"at {cpus} CPUs", file=sys.stderr)
+        bands[key] = (hist + [round(dt, 3)])[-8:]
+    with open(path, "w") as fh:
+        json.dump(all_bands, fh, separators=(",", ":"), sort_keys=True)
+        fh.write("\n")
+    return exits
+
+
+def _mode_extras(mode: str, readings: dict, timings: dict,
+                 n_passes: int) -> dict:
+    """Payload keys only one mode has."""
+    if mode == "stress":
+        # linear-extrapolation table: base from this run when present,
+        # else from the committed BENCH_LOCAL.json; ratio > 2 needs a
+        # named cause in BASELINE.md
+        import bench_stress
+        with open(os.path.join(REPO, "BENCH_LOCAL.json")) as fh:
+            local = json.load(fh)["queries"]
+        linear = {}
+        for entry, base, factor in bench_stress.LINEAR_BASES:
+            base_sec = timings.get(base, local.get(base))
+            if entry in timings and base_sec:
+                lin = base_sec * factor
+                linear[entry] = {
+                    "base": base, "base_sec": round(base_sec, 3),
+                    "factor": factor, "linear_sec": round(lin, 2),
+                    "ratio": round(timings[entry] / lin, 3)}
+        return {"linear": linear}
+    if mode == "skew":
+        out = {n: {"runs": r, "min": min(r),
+                   "median": round(statistics.median(r), 3)}
+               for n, r in readings.items()}
+        for n in ("salted", "aqe_default", "aqe_tuned"):
+            if n in timings and "plain" in timings:
+                out[f"speedup_{n}_min"] = round(
+                    timings["plain"] / timings[n], 2)
+        return {**out, "runs": n_passes, "n_rows": SKEW_ROWS,
+                "hot_share": 0.9, "salt_buckets": SKEW_SALT}
+    return {}
+
+
+def main(argv=None) -> None:
+    ap = argparse.ArgumentParser(
+        description=__doc__,
+        formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--only", nargs="+", metavar="NAME",
+                    help="run only these entries, in this order; tiers "
+                         "they need are generated at first use if missing")
+    ap.add_argument("--explain", metavar="DIR",
+                    help="write DIR/<name>.txt, each entry's formatted "
+                         "plan, after it is built and before it runs")
+    ap.add_argument("--profile", action="store_true",
+                    help="record each entry's Spark jobs, tasks, task "
+                         "time, shuffle, spill and GC (its fastest pass)")
+    which = ap.add_mutually_exclusive_group()
+    which.add_argument("--stress", action="store_true",
+                       help="the decade-above entries of bench_stress.py")
+    which.add_argument("--skew", action="store_true",
+                       help="the skew-join variant table")
+    args = ap.parse_args(argv)
+    mode = "stress" if args.stress else "skew" if args.skew else "main"
+    metric, out_name, bands_name = MODES[mode]
+    entries = resolve(mode, args.only)
+    n_passes = int(os.environ.get(
+        "SPARK_GRAFT_BENCH_PASSES",
+        os.environ.get("SKEW_BENCH_RUNS", "3") if args.skew else "2"))
+    out_path = os.environ.get("BENCH_OUT") or (
+        os.path.join(REPO, out_name) if out_name and not args.only else None)
+
+    import __spark_entry__ as entry_mod
+    from flood_data_spark.session import get_spark
+    from perfbench.spans import NullTracer, Tracer
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+    os.makedirs(os.path.join(WORK, "tmp"), exist_ok=True)
+    os.environ["TMPDIR"] = os.path.join(WORK, "tmp")   # Python workers
+    spark = get_spark(app_name="bench", master=f"local[{cpus}]",
+                      extra_conf=session_posture(
+                          os.sysconf("SC_PAGE_SIZE")
+                          * os.sysconf("SC_PHYS_PAGES"), cpus))
+    _warm_up(spark)
+    tiers = [] if args.only else _tiers(mode, spark)
     spark._jvm.System.gc()
-
-    # EVERY entry records min over two INTERLEAVED passes (VERDICT r14
-    # #2 — the mechanical replacement for the per-round prose about
-    # which entries were "load noise"): single shots of I/O-bound
-    # multi-second queries on this box are bimodal (x10 flagship
-    # observed 3.1-23 s across six otherwise-identical runs; zero CPU
-    # steal), and r12-r14 each burned a verdict cycle re-measuring a
-    # "regressed" block that was session-position/load noise.  Two
-    # full passes separate plan cost from both effects: within a pass
-    # every entry keeps its session position; across passes the min
-    # discards whichever reading the box loaded.  Override passes with
-    # SPARK_GRAFT_BENCH_PASSES=1 for quick local iteration.
-    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    timings: dict = {}
+    tracer = Tracer(spark) if args.profile else NullTracer()
+    if args.explain:
+        os.makedirs(args.explain, exist_ok=True)
+        explain_mode = spark._jvm.org.apache.spark.sql.execution \
+            .ExplainMode.fromString("formatted")
+    readings: dict = {}     # name -> seconds per pass
     batches: dict = {}
-    cold: dict = {}
-    for pass_i in range(n_passes):
-        _warm_page_cache()
-        for name in BENCH_QUERIES:
+    profile: dict = {}
+
+    def payload(completed: int) -> dict:
+        timings = {n: min(r) for n, r in readings.items()}
+        sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+        p = {"metric": metric, "value": round(sum(timings.values()), 2),
+             "unit": "sec",
+             "queries": {k: round(v, 2) for k, v in timings.items()},
+             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+             "passes": n_passes,
+             # stream entries: micro-batch count next to the seconds
+             "stream_batches": batches,
+             # pass-1 readings of the big tiers (warm = the min above)
+             "cold_sec": {n: r[0] for n, r in readings.items()
+                          if mode == "stress" or n in COLD_TRACKED}}
+        if completed < n_passes:
+            # a run cut mid-pass still leaves a parseable artifact
+            return {**p, "passes_completed": completed}
+        # bands track the canonical configuration only (sf0.1, every
+        # entry, min of >= 2 passes): a quick run must not pollute the
+        # history it is later compared with
+        canonical = (bands_name and not args.only and n_passes >= 2
+                     and SF_DIR.rstrip("/").endswith("sf0.1"))
+        p["band_exits"] = (_check_bands(os.path.join(REPO, bands_name),
+                                        cpus, timings, p["cold_sec"])
+                           if canonical else [])
+        if args.profile:
+            p["profile"] = profile
+        return {**p, **_mode_extras(mode, readings, timings, n_passes)}
+
+    def emit(p: dict) -> None:
+        line = json.dumps(p, separators=(",", ":"))
+        if out_path:
+            with open(out_path, "w") as fh:
+                fh.write(line + "\n")
+        # the last stdout line: the payload plus a pointer at the file
+        print(json.dumps({**p, "n_entries": len(p["queries"]),
+                          "full": out_path and os.path.basename(out_path)},
+                         separators=(",", ":")), flush=True)
+
+    for pass_i in range(max(n_passes, 1)):
+        _warm_page_cache([SF_DIR, *tiers])
+        for name, fn in entries.items():
             entry_mod.STREAM_BATCHES.clear()
-            t0 = time.time()
-            df = (qs.get(name) or EXTRA_QUERIES[name])(spark, SF_DIR)
-            # noop sink, NOT count(): count() lets Catalyst prune
-            # unreferenced projections, so pure per-row transform queries
-            # (token counting, quality scoring) would measure only the scan
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
+            with tracer.span(name) as span:
+                t0 = time.time()
+                df = fn(spark, SF_DIR)
+                dt = time.time() - t0
+                if args.explain and pass_i == 0:
+                    with open(os.path.join(args.explain, f"{name}.txt"),
+                              "w") as fh:
+                        fh.write(df._jdf.queryExecution()
+                                 .explainString(explain_mode) + "\n")
+                if n_passes:
+                    # noop sink, NOT count(): count() lets Catalyst prune
+                    # unreferenced projections, so per-row transform
+                    # entries would measure only the scan
+                    t0 = time.time()
+                    df.write.format("noop").mode("overwrite").save()
+                    dt += time.time() - t0
+            tracer.resolve()
+            readings.setdefault(name, []).append(round(dt, 3))
             if entry_mod.STREAM_BATCHES:
-                # micro-batch count next to the seconds: stream entries
-                # pay fixed per-batch machinery batch entries don't
-                # (VERDICT r14 #6) — deterministic per plan, so either
-                # pass's reading is THE count
                 batches[name] = sum(entry_mod.STREAM_BATCHES)
-            if name not in timings or dt < timings[name]:
-                timings[name] = round(dt, 3)
-            if pass_i == 0 and name in COLD_TRACKED:
-                cold[name] = round(dt, 3)
-            print(f"# pass{pass_i + 1} {name}: {dt:.2f}s",
-                  file=sys.stderr)
-            # isolate queries: internal .cache()/.persist() calls (LSH
-            # bucket relations, IVF lists) otherwise accumulate across the
-            # session and turn later timings into GC noise.  Outside the
-            # timed region — the next query rebuilds its own caches inside
-            # its own wall time.  EXCEPT after q_ivf_build: clearing there
-            # would unpersist the inverted lists the probe entry is
-            # documented to reuse, silently folding the full-corpus list
-            # assignment back into the "pure search" probe timing.
-            if name not in ("q_ivf_build", "q_bm25_index_build"):
+            counters = {k: round(v, 3)
+                        for k, v in span.get("counters", {}).items()}
+            if counters and min(readings[name]) == readings[name][-1]:
+                profile[name] = counters
+            print(f"# pass{pass_i + 1} {name}: {dt:.2f}s"
+                  + (f" {counters}" if counters else ""), file=sys.stderr)
+            # isolate entries: internal caches otherwise accumulate across
+            # the session and turn later timings into GC noise; outside
+            # the timed region, as is the full GC
+            if name not in KEEP_CACHE_AFTER:
                 spark.catalog.clearCache()
-            # nudge a full GC between queries (outside the timed region):
-            # accumulated broadcast/cache garbage otherwise surfaces as
-            # multi-second pauses inside whichever later query trips the
-            # collector
             spark._jvm.System.gc()
-        # checkpoint the artifact after EVERY pass: a harness timeout
-        # mid-pass-2 must still leave a complete, parseable file (and
-        # a parseable stdout tail) carrying pass-1's full sweep —
-        # marked with passes_completed so a partial capture is
-        # self-describing.  The final write below overwrites both.
-        if pass_i + 1 < n_passes:
-            ckpt = {
-                "metric": "headline_queries_total_runtime",
-                "value": round(sum(timings.values()), 2),
-                "unit": "sec",
-                "queries": {k: round(v, 2) for k, v in timings.items()},
-                "sf": (lambda s: float(s)
-                       if s.replace(".", "").isdigit() else s)(
-                    SF_DIR.rstrip("/").rsplit("sf", 1)[-1]),
-                "passes": n_passes,
-                "passes_completed": pass_i + 1,
-                "stream_batches": batches,
-            }
-            ckpt_line = json.dumps(ckpt, separators=(",", ":"))
-            ckpt_path = os.environ.get(
-                "BENCH_OUT", os.path.join(os.path.dirname(
-                    os.path.abspath(__file__)), "BENCH_LOCAL.json"))
-            with open(ckpt_path, "w") as fh:
-                fh.write(ckpt_line + "\n")
-            print(ckpt_line)
-    total = sum(timings.values())
-
-    # BENCH_BANDS.json: {entry: [per-round best, ...]} — the mechanical
-    # band file (VERDICT r14 #2).  Each run appends its min-of-passes
-    # reading (bounded history); an entry reading > 2x its historical
-    # best FAILS LOUDLY here, at bench time, instead of surfacing as
-    # prose archaeology a verdict later.  Band exits are recorded in
-    # the payload so the committed artifact carries the alarm too.
-    # bands only track the canonical configuration (sf0.1, full
-    # min-of-2): a quick sf0.01 or single-pass iteration run must not
-    # pollute the history it would later be compared against
-    canonical = (SF_DIR.rstrip("/").endswith("sf0.1")
-                 and n_passes >= 2)
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    bands_path = os.path.join(repo_dir, "BENCH_BANDS.json")
-    bands: dict = {}
-    if canonical and os.path.exists(bands_path):
-        try:
-            with open(bands_path) as fh:
-                bands = json.load(fh)
-        except Exception:
-            bands = {}
-    band_exits = []
-    if canonical:
-        for name, dt in cold.items():
-            key = name + "__cold"
-            hist = [v for v in bands.get(key, [])
-                    if isinstance(v, (int, float))]
-            if hist and dt > 2 * min(hist):
-                band_exits.append(key)
-                print(f"# BAND EXIT (cold): {name} pass-1 {dt:.2f}s "
-                      f"> 2x historical cold best {min(hist):.2f}s",
-                      file=sys.stderr)
-            bands[key] = (hist + [round(dt, 3)])[-8:]
-        for name, dt in timings.items():
-            hist = [v for v in bands.get(name, [])
-                    if isinstance(v, (int, float))]
-            if hist and dt > 2 * min(hist):
-                band_exits.append(name)
-                print(f"# BAND EXIT: {name} {dt:.2f}s > 2x historical "
-                      f"best {min(hist):.2f}s", file=sys.stderr)
-            bands[name] = (hist + [round(dt, 3)])[-8:]
-        with open(bands_path, "w") as fh:
-            json.dump(bands, fh, separators=(",", ":"), sort_keys=True)
-            fh.write("\n")
-
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    # compact separators + 2-decimal timings: the driver records only the
-    # TAIL of stdout, and the r8/r9 artifacts came back `parsed: null`
-    # because the pretty-printed ~3.4 KB line lost its opening brace to
-    # the capture window — the one JSON line must stay comfortably under
-    # ~3 KB end-to-end
-    payload = {
-        "metric": "headline_queries_total_runtime",
-        "value": round(total, 2),
-        "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "passes": n_passes,
-        # stream entries: micro-batch count next to the seconds
-        "stream_batches": batches,
-        # pass-1 readings for the big tiers (warm = the min above)
-        "cold_sec": cold,
-        # entries reading > 2x their historical best (BENCH_BANDS.json)
-        "band_exits": band_exits,
-    }
-    line = json.dumps(payload, separators=(",", ":"))
-    # the complete artifact goes to a file: the driver records only the
-    # TAIL of stdout, and the r11/r14 artifacts came back `parsed: null`
-    # because the capture window clipped the ~3.5 KB full line.  A
-    # committed file whose entry count equals the registry is the
-    # durable record; BENCH_OUT overrides the default path.
-    out_path = os.environ.get(
-        "BENCH_OUT", os.path.join(os.path.dirname(
-            os.path.abspath(__file__)), "BENCH_LOCAL.json"))
-    with open(out_path, "w") as fh:
-        fh.write(line + "\n")
-    print(f"# wrote {out_path} ({len(timings)} entries)", file=sys.stderr)
-    # stdout gets the full line first (captured whole when the window
-    # allows), then — LAST, so a clipped capture still ends on valid
-    # JSON — a compact line: headline total, the 20 slowest entries,
-    # and an explicit pointer at the canonical file artifact
-    # (VERDICT r14 #4: the driver artifact must parse or point).
-    print(line)
-    top = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:20])
-    compact = dict(payload)
-    compact["queries"] = {k: round(v, 2) for k, v in top.items()}
-    compact["n_entries"] = len(timings)
-    compact["full"] = os.path.basename(out_path)
-    print(json.dumps(compact, separators=(",", ":")))
+        if n_passes:
+            emit(payload(pass_i + 1))
 
 
 if __name__ == "__main__":

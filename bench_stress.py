@@ -1,9 +1,8 @@
-#!/usr/bin/env python
-"""Scale-stress bench (VERDICT r15 #1): the decade ABOVE the per-round
+"""Scale-stress entries (VERDICT r15 #1): the decade ABOVE the per-round
 bench, proving the 100x scale claims with measurements instead of
-plan prose.  Run manually (not by the per-round driver — the third
-decade costs ~10-15 min, which would triple the per-round budget);
-results are committed as BENCH_STRESS.json with their own band file
+plan prose.  Run with `python bench.py --stress` (not part of the
+per-round bench: the third decade costs ~10-15 min on local[32]); results
+are committed as BENCH_STRESS.json with their own band file
 (BENCH_STRESS_BANDS.json, same 2x loud-exit rule) and analyzed in
 BASELINE.md.
 
@@ -31,25 +30,18 @@ Entries and their linear-extrapolation bases:
                               105 s classic / ~30 s bucketed at r15)
 
 All tiers are deterministic, generated once OUTSIDE the timed region,
-and live on /dev/shm (this box's virtio disk writes at 62 MB/s; a
-cluster writes tiers to NVMe — the tmpfs tier is the cluster-shaped
-stand-in, same argument as bench.py's shuffle dir).  Entries record
-min over two interleaved passes + the pass-1 cold reading.
+and cached under .bench_scale/stress in the checkout
+($SPARK_STRESS_TIER_DIR overrides).  The x1000 lineitem tier is ~5 GB
+on disk.
 """
 from __future__ import annotations
 
-import json
 import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from bench import SF_DIR, WORK, _src_fingerprint
 
-from bench import SF_DIR, _src_fingerprint  # noqa: E402
-
-REPO = os.path.dirname(os.path.abspath(__file__))
 TIER_ROOT = os.environ.get("SPARK_STRESS_TIER_DIR",
-                           "/dev/shm/spark-stress-tiers")
+                           os.path.join(WORK, "stress"))
 
 
 # ---------------------------------------------------------------- tiers
@@ -58,7 +50,7 @@ TIER_ROOT = os.environ.get("SPARK_STRESS_TIER_DIR",
 def _lineitem_x1000_path(spark):
     """600M-row 3-column flagship tier (l_partkey, l_linenumber,
     l_extendedprice — all the x1000 entries read): 1000 perturbed
-    replicas per sf0.1 lineitem row, 32 files.  ~5 GB on tmpfs;
+    replicas per sf0.1 lineitem row, 32 files.  ~5 GB on disk;
     generation (~1-2 min) is NOT timed."""
     from pyspark.sql import functions as F
     fp = _src_fingerprint(f"{SF_DIR}/lineitem.parquet")
@@ -317,10 +309,6 @@ STRESS_QUERIES = {
     "q_quantile_map_patho": _q_quantile_map_patho,
 }
 
-# persisted-index entries: clearing the cache after them would fold the
-# build back into the probe timing
-_KEEP_CACHE_AFTER = {"q_ivf_build_x10tier", "q_ivf_build_x100tier"}
-
 # (entry, base, factor): base from this run when present, else from the
 # committed BENCH_LOCAL.json.  ratio = measured / (base * factor); > 2
 # needs a named cause in BASELINE.md.
@@ -333,109 +321,3 @@ LINEAR_BASES = [
     ("q_ivf_probe_x100tier", "q_ivf_probe_x10tier", 10),
 ]
 
-
-def main():
-    from flood_data_spark.session import get_spark
-
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
-    heap = os.environ["SPARK_DRIVER_MEMORY"]
-    extra = {"spark.driver.extraJavaOptions": f"-Xms{heap}"}
-    if os.path.isdir("/dev/shm"):
-        shm_dir = "/dev/shm/spark-bench-local"
-        os.makedirs(shm_dir, exist_ok=True)
-        extra["spark.local.dir"] = shm_dir
-    spark = get_spark(app_name="bench_stress", extra_conf=extra)
-
-    os.makedirs(TIER_ROOT, exist_ok=True)
-    # materialize every tier off the clock
-    _lineitem_x1000_path(spark)
-    _documents_x100_path(spark)
-    _embeddings_x100_path(spark)
-    _patho_paths(spark)
-    # JIT/codegen warmup — same rationale as bench.py
-    spark.read.parquet(f"{SF_DIR}/region.parquet") \
-        .write.format("noop").mode("overwrite").save()
-
-    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    timings: dict = {}
-    cold: dict = {}
-    for pass_i in range(n_passes):
-        for name, fn in STRESS_QUERIES.items():
-            t0 = time.time()
-            fn(spark, SF_DIR).write.format("noop") \
-                .mode("overwrite").save()
-            dt = time.time() - t0
-            if name not in timings or dt < timings[name]:
-                timings[name] = round(dt, 3)
-            if pass_i == 0:
-                cold[name] = round(dt, 3)
-            print(f"# pass{pass_i + 1} {name}: {dt:.2f}s",
-                  file=sys.stderr)
-            if name not in _KEEP_CACHE_AFTER:
-                spark.catalog.clearCache()
-            spark._jvm.System.gc()
-
-    # linear-extrapolation table
-    local = {}
-    try:
-        local = json.load(open(os.path.join(REPO, "BENCH_LOCAL.json"))
-                          )["queries"]
-    except Exception:
-        pass
-    linear = {}
-    for entry, base, factor in LINEAR_BASES:
-        base_sec = timings.get(base, local.get(base))
-        if entry in timings and base_sec:
-            lin = base_sec * factor
-            linear[entry] = {
-                "base": base, "base_sec": round(base_sec, 3),
-                "factor": factor, "linear_sec": round(lin, 2),
-                "ratio": round(timings[entry] / lin, 3)}
-
-    # band file, same 2x loud-exit rule as the main bench; bands only
-    # track the canonical configuration (sf0.1, min-of-2) — same guard
-    # as bench.py
-    canonical = (SF_DIR.rstrip("/").endswith("sf0.1") and n_passes >= 2)
-    bands_path = os.path.join(REPO, "BENCH_STRESS_BANDS.json")
-    bands = {}
-    if canonical and os.path.exists(bands_path):
-        try:
-            bands = json.load(open(bands_path))
-        except Exception:
-            bands = {}
-    band_exits = []
-    if canonical:
-        for name, dt in timings.items():
-            hist = [v for v in bands.get(name, [])
-                    if isinstance(v, (int, float))]
-            if hist and dt > 2 * min(hist):
-                band_exits.append(name)
-                print(f"# BAND EXIT: {name} {dt:.2f}s > 2x best "
-                      f"{min(hist):.2f}s", file=sys.stderr)
-            bands[name] = (hist + [round(dt, 3)])[-8:]
-        with open(bands_path, "w") as fh:
-            json.dump(bands, fh, separators=(",", ":"),
-                      sort_keys=True)
-            fh.write("\n")
-
-    payload = {
-        "metric": "scale_stress_total_runtime",
-        "value": round(sum(timings.values()), 2),
-        "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        "cold_sec": cold,
-        "linear": linear,
-        "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
-        "passes": n_passes,
-        "band_exits": band_exits,
-    }
-    line = json.dumps(payload, separators=(",", ":"))
-    out_path = os.environ.get(
-        "BENCH_OUT", os.path.join(REPO, "BENCH_STRESS.json"))
-    with open(out_path, "w") as fh:
-        fh.write(line + "\n")
-    print(line)
-
-
-if __name__ == "__main__":
-    main()

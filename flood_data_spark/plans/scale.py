@@ -104,7 +104,7 @@ def join_fanout_report(left: DataFrame, right: DataFrame, keys,
     never the join itself) before paying for a shuffle that one hot
     key would straggle.
 
-    recommendation (measured rules — scripts/bench_skew.py numbers in
+    recommendation (measured rules — `bench.py --skew` numbers in
     docs/SCALE_NOTES.md "AQE vs salted_join"):
 
       'broadcast'  the whole right side is under

@@ -75,6 +75,17 @@ def upsert_partitions(df: DataFrame, path: str, partition_by) -> None:
     scopes mode="overwrite" to the partitions the incoming frame actually
     contains — set per-write here, not globally, so plain overwrite writes
     elsewhere keep their whole-table semantics.
+
+    Single writer per partition: the caller serialises calls that may
+    write the same partition value of one table.  Two concurrent dynamic
+    overwrites of one partition are unsupported and unguarded: each job
+    commits by deleting the partition directory and renaming its own
+    staged copy into place, so the two commits race: one can fail, or one
+    writer's rows for that day can be lost.  Concurrent calls whose
+    partition values are disjoint are safe: each job stages under its own
+    `.spark-staging-<job id>` directory and replaces only the partitions
+    it wrote (the re-issue loop of `q_daily_incremental` overlaps two such
+    upserts).
     """
     pb = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     (df.write.mode("overwrite")

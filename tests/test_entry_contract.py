@@ -78,6 +78,22 @@ def test_bench_queries_exist():
             f"bench references unknown query {name}")
 
 
+def test_stress_and_skew_entries_resolve():
+    # the --stress and --skew modes resolve their whole sets by name,
+    # and every name resolves on its own, as --only passes it
+    for mode in ("stress", "skew"):
+        entries = bench.resolve(mode)
+        assert entries, f"--{mode} has no entries"
+        for name, fn in entries.items():
+            assert callable(fn), f"--{mode} entry {name} is not callable"
+            assert bench.resolve(mode, [name]) == {name: fn}
+    stress = bench.resolve("stress")
+    import bench_stress
+    for entry, base, _factor in bench_stress.LINEAR_BASES:
+        assert entry in stress, f"linear base names unknown entry {entry}"
+        assert base in stress or base in bench.BENCH_QUERIES, base
+
+
 def test_contract_twins_not_in_bench():
     # contract queries compute O(n^2)/exact ground truth on purpose —
     # benching them would reintroduce the noisy exact path as a headline
