@@ -11,12 +11,14 @@ on local[nproc], in one Spark session sized for the box it runs on.
 
 Every entry is built and materialized through the noop sink (timings
 include planning + execution) once per pass; an entry records the min over
-SPARK_GRAFT_BENCH_PASSES interleaved passes (default 2; SKEW_BENCH_RUNS,
-default 3, for --skew).  SPARK_GRAFT_BENCH_PASSES=0 builds (and with
---explain, explains) every entry without executing it.  The last stdout
-line is the JSON payload, every entry's timing included; a full run also
-writes it to BENCH_LOCAL.json (--stress: BENCH_STRESS.json), and BENCH_OUT
-names the file for any run.  Generated tiers, shuffle, spill and scratch
+SPARK_GRAFT_BENCH_PASSES interleaved passes (default 2; 3 for --skew).
+SPARK_GRAFT_BENCH_PASSES=0 builds (and with --explain, explains) every
+entry without executing it.  stdout carries the JSON payload on one line;
+when that line is longer than TAIL_BYTES a compact line follows it, and
+either way the last line carries every entry's timing.  A full run also
+writes the payload to BENCH_LOCAL.json (--stress: BENCH_STRESS.json), and
+BENCH_OUT names the file for any run; --profile counters go to that file
+and to stderr, not to stdout.  Generated tiers, shuffle, spill and scratch
 live under .bench_scale/ in the checkout (shuffle under SPARK_LOCAL_DIRS
 when that is set).
 """
@@ -1251,7 +1253,7 @@ EXTRA_QUERIES = {
 # key, next to AQE's skew-join splitter at default and at data-sized
 # thresholds.  Kept out of the headline set: single shots of the pair are
 # bimodal near the GC/spill boundary, so it records min and median over
-# SKEW_BENCH_RUNS passes.  Shape (calibrated on local[32], 8 GiB heap; see
+# 3 passes by default.  Shape (calibrated on local[32], 8 GiB heap; see
 # docs/SCALE_NOTES.md): a range-generated 30M-row large side with 90% of
 # rows on key 0 (a near-free map side, so wall time isolates the
 # reduce-side straggler) against 250k small-side keys, broadcast off.
@@ -1294,14 +1296,19 @@ SKEW_QUERIES = {
     "salted": _skew_variant(False, False, salted=True),
 }
 
-# mode: (payload metric, default artifact, band file)
+# mode: (payload metric, default artifact, band file, default passes)
 MODES = {
     "main": ("headline_queries_total_runtime", "BENCH_LOCAL.json",
-             "BENCH_BANDS.json"),
+             "BENCH_BANDS.json", 2),
     "stress": ("scale_stress_total_runtime", "BENCH_STRESS.json",
-               "BENCH_STRESS_BANDS.json"),
-    "skew": ("skew_join", None, None),
+               "BENCH_STRESS_BANDS.json", 2),
+    "skew": ("skew_join", None, None, 3),
 }
+
+# Readers of the run that keep only the tail of stdout clipped payload
+# lines of ~3.4-3.5 KB and parsed them as null, so no last line may be
+# longer than this.
+TAIL_BYTES = 3000
 
 # persisted-index entries: clearing the cache after them would unpersist
 # the index their probe entry is documented to reuse, folding the build
@@ -1329,22 +1336,23 @@ def resolve(mode: str, names=None) -> dict:
     return {n: table[n] for n in names}
 
 
-def session_posture(mem_bytes: int, cpus: int) -> dict:
+def session_posture(mem_bytes: int) -> dict:
     """Spark conf for one harness session on a box with `mem_bytes` of
-    physical memory and `cpus` task threads.
+    physical memory.
 
-    The driver heap is half the box, capped so that 256 MB per task
-    thread (its Python worker) and 2 GB (the JVM's off-heap memory and the
-    OS) stay free, and never under a quarter of the box.  It is not
-    pre-sized, so a small run does not hold it.  Shuffle, spill, JVM temp files and the
+    The JVM heap is half the box; the other half is for the Python
+    workers, the JVM's off-heap memory and the page cache the tiers are
+    read from.  The heap is as large as that allows because one session
+    runs every entry: on a 32-core box with an 8g heap the tail entries
+    read up to 2.6x slower from accumulated broadcast/cache garbage
+    (q_threshold_summary_x10 16.5 s at the tail vs 6.3 s isolated), which
+    is why the harness ran at 16g there.  It is not pre-sized, so a small
+    run does not hold it.  Shuffle, spill, JVM temp files and the
     warehouse live under WORK in the checkout (shuffle under
     SPARK_LOCAL_DIRS when that is set), never on a tmpfs, which takes its
     pages from the same memory as the heap."""
-    mem_mb = mem_bytes >> 20
-    heap_mb = max(mem_mb // 4,
-                  min(mem_mb // 2, mem_mb - 256 * cpus - 2048))
     return {
-        "spark.driver.memory": f"{heap_mb}m",
+        "spark.driver.memory": f"{mem_bytes // 2 >> 20}m",
         "spark.local.dir": (os.environ.get("SPARK_LOCAL_DIRS")
                             or os.path.join(WORK, "spark-local")),
         "spark.sql.warehouse.dir": os.path.join(WORK, "warehouse"),
@@ -1486,6 +1494,26 @@ def _mode_extras(mode: str, readings: dict, timings: dict,
     return {}
 
 
+def stdout_lines(p: dict, out_path=None) -> list:
+    """The payload as stdout lines; a parser reads the last.  First the
+    payload without its per-entry --profile counters.  If that is longer
+    than TAIL_BYTES, a compact last line follows: the headline keys, the 20
+    slowest entries by name, `sec` (every entry's seconds, in the order of
+    the full line's `queries`), `n_entries` and `full` (the file that
+    holds the payload)."""
+    p = {k: v for k, v in p.items() if k != "profile"}
+    lines = [json.dumps(p, separators=(",", ":"))]
+    if len(lines[0]) > TAIL_BYTES:
+        q = p["queries"]
+        compact = {k: v for k, v in p.items() if k != "linear"}
+        compact["queries"] = dict(sorted(q.items(),
+                                         key=lambda kv: -kv[1])[:20])
+        compact.update(sec=list(q.values()), n_entries=len(q),
+                       full=out_path and os.path.basename(out_path))
+        lines.append(json.dumps(compact, separators=(",", ":")))
+    return lines
+
+
 def main(argv=None) -> None:
     ap = argparse.ArgumentParser(
         description=__doc__,
@@ -1506,11 +1534,10 @@ def main(argv=None) -> None:
                        help="the skew-join variant table")
     args = ap.parse_args(argv)
     mode = "stress" if args.stress else "skew" if args.skew else "main"
-    metric, out_name, bands_name = MODES[mode]
+    metric, out_name, bands_name, default_passes = MODES[mode]
     entries = resolve(mode, args.only)
-    n_passes = int(os.environ.get(
-        "SPARK_GRAFT_BENCH_PASSES",
-        os.environ.get("SKEW_BENCH_RUNS", "3") if args.skew else "2"))
+    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES",
+                                  default_passes))
     out_path = os.environ.get("BENCH_OUT") or (
         os.path.join(REPO, out_name) if out_name and not args.only else None)
 
@@ -1522,10 +1549,16 @@ def main(argv=None) -> None:
                or len(os.sched_getaffinity(0)))
     os.makedirs(os.path.join(WORK, "tmp"), exist_ok=True)
     os.environ["TMPDIR"] = os.path.join(WORK, "tmp")   # Python workers
+    conf = session_posture(os.sysconf("SC_PAGE_SIZE")
+                           * os.sysconf("SC_PHYS_PAGES"))
+    if args.profile:
+        # past spark.ui.retainedStages (1000) stages the status store
+        # evicts skipped stages first, so deep into a full run an entry's
+        # own reused-shuffle stages are gone before the tracer reads them
+        # (NoSuchElementException from lastStageAttempt)
+        conf["spark.ui.retainedStages"] = str(10**6)
     spark = get_spark(app_name="bench", master=f"local[{cpus}]",
-                      extra_conf=session_posture(
-                          os.sysconf("SC_PAGE_SIZE")
-                          * os.sysconf("SC_PHYS_PAGES"), cpus))
+                      extra_conf=conf)
     _warm_up(spark)
     tiers = [] if args.only else _tiers(mode, spark)
     spark._jvm.System.gc()
@@ -1567,14 +1600,11 @@ def main(argv=None) -> None:
         return {**p, **_mode_extras(mode, readings, timings, n_passes)}
 
     def emit(p: dict) -> None:
-        line = json.dumps(p, separators=(",", ":"))
         if out_path:
             with open(out_path, "w") as fh:
-                fh.write(line + "\n")
-        # the last stdout line: the payload plus a pointer at the file
-        print(json.dumps({**p, "n_entries": len(p["queries"]),
-                          "full": out_path and os.path.basename(out_path)},
-                         separators=(",", ":")), flush=True)
+                fh.write(json.dumps(p, separators=(",", ":")) + "\n")
+        for line in stdout_lines(p, out_path):
+            print(line, flush=True)
 
     for pass_i in range(max(n_passes, 1)):
         _warm_page_cache([SF_DIR, *tiers])
