@@ -99,17 +99,12 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 
 def _scratch_dir(prefix: str) -> str:
-    """Scratch directory for gate-internal stores/checkpoints — on
-    tmpfs when available: the gates that PUBLISH (upsert stores,
-    stream checkpoints) otherwise measure this box's 62 MB/s virtio
-    write path instead of the operator (measured, BASELINE.md round
-    15); semantics (dynamic partition overwrite, re-read, recovery)
-    are filesystem-agnostic.  Callers still shutil.rmtree it."""
-    import os
+    """Scratch directory for gate-internal stores/checkpoints, in the
+    default temp directory (TMPDIR): a tmpfs such as /dev/shm would take
+    from the same RAM as the session's heap.  Callers shutil.rmtree it."""
     import tempfile
 
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+    return tempfile.mkdtemp(prefix=prefix)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -595,14 +590,21 @@ def _run_file_stream(spark: SparkSession, parquet_path: str,
     instance per shuffle partition, each paying a per-batch lifecycle
     (store open, delta/snapshot file, commit) regardless of content.  At
     the session default (cores-sized) most stores hold zero groups and
-    the machinery dominates the micro-batch: measured on this box,
+    the machinery dominates the micro-batch: measured on a 32-core box,
     q_kge_stream 3.31 s -> 2.13 s and q_rps_stream 1.77 -> 1.30 s
     (interleaved min-of-4) at 8 state partitions vs 32.  The count is
     state-cardinality-driven, NOT core-count-driven — it stays right on
     a large cluster for these group-bounded states, and big-state
     streams override via SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS.  Values
     are partition-count-invariant (the perturbed oracle sweep already
-    runs every value gate at shuffle.partitions 1 and 7)."""
+    runs every value gate at shuffle.partitions 1 and 7).
+
+    The stream runs on a `newSession()` clone (own SQL conf and temp
+    views, shared SparkContext) that copies the caller's runtime conf and
+    sets only its own partition count, so the caller's session conf is
+    never touched — a concurrent query on it keeps its own partitioning.
+    The memory-sink table lives in the clone, and the returned DataFrame
+    belongs to it."""
     import os
     import shutil
     import tempfile
@@ -615,18 +617,20 @@ def _run_file_stream(spark: SparkSession, parquet_path: str,
     path = os.path.abspath(parquet_path)
     src_dir = _scratch_dir("stream_src_")
     ckpt_dir = _scratch_dir("ckpt_")
-    stream_parts = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
-                                  "8")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    stream_spark = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            stream_spark.conf.set(k, v)
+    stream_spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8"))
     try:
         os.symlink(path, os.path.join(src_dir, os.path.basename(path)))
-        schema = spark.read.parquet(path).schema  # footer-only metadata read
-        agg = build_stream(spark.readStream.schema(schema).parquet(src_dir))
+        # footer-only metadata read
+        schema = stream_spark.read.parquet(path).schema
+        agg = build_stream(
+            stream_spark.readStream.schema(schema).parquet(src_dir))
         name = name_prefix + uuid.uuid4().hex[:8]
-        # bind the state partitioning at query start; restored in finally
-        # (gates run serially — bench, oracle, tests — so the temporary
-        # session-conf change cannot leak into a concurrent plan)
-        spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
         q = run_available_now(agg, ckpt_dir, query_name=name,
                               output_mode=output_mode)
         q.awaitTermination()
@@ -637,10 +641,9 @@ def _run_file_stream(spark: SparkSession, parquet_path: str,
         except Exception:
             pass  # progress introspection must never fail a gate
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         shutil.rmtree(src_dir, ignore_errors=True)
         shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return spark.table(name)
+    return stream_spark.table(name)
 
 
 def q_stream_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,7 +5,8 @@ on local[nproc], in one Spark session sized for the box it runs on.
     python bench.py                          # the 180-entry headline set
     python bench.py --only q1 q_crps_x10     # named entries, in isolation
     python bench.py --explain plans/ ...     # + each entry's formatted plan
-    python bench.py --profile ...            # + jobs/tasks/shuffle/spill/GC
+    python bench.py --profile ...            # + jobs/tasks/shuffle/spill/GC/
+                                             #   compiled classes
     python bench.py --stress                 # bench_stress.py's decade tiers
     python bench.py --skew                   # the skew-join variant table
 
@@ -1526,7 +1527,8 @@ def main(argv=None) -> None:
                          "plan, after it is built and before it runs")
     ap.add_argument("--profile", action="store_true",
                     help="record each entry's Spark jobs, tasks, task "
-                         "time, shuffle, spill and GC (its fastest pass)")
+                         "time, shuffle, spill, GC and compiled classes "
+                         "(its fastest pass)")
     which = ap.add_mutually_exclusive_group()
     which.add_argument("--stress", action="store_true",
                        help="the decade-above entries of bench_stress.py")
@@ -1563,6 +1565,9 @@ def main(argv=None) -> None:
     tiers = [] if args.only else _tiers(mode, spark)
     spark._jvm.System.gc()
     tracer = Tracer(spark) if args.profile else NullTracer()
+    # classes Janino compiled so far in this JVM (codegen cache misses)
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME().getCount)
     if args.explain:
         os.makedirs(args.explain, exist_ok=True)
         explain_mode = spark._jvm.org.apache.spark.sql.execution \
@@ -1610,6 +1615,7 @@ def main(argv=None) -> None:
         _warm_page_cache([SF_DIR, *tiers])
         for name, fn in entries.items():
             entry_mod.STREAM_BATCHES.clear()
+            compiled = compiles()
             with tracer.span(name) as span:
                 t0 = time.time()
                 df = fn(spark, SF_DIR)
@@ -1632,6 +1638,8 @@ def main(argv=None) -> None:
                 batches[name] = sum(entry_mod.STREAM_BATCHES)
             counters = {k: round(v, 3)
                         for k, v in span.get("counters", {}).items()}
+            if args.profile:
+                counters["compiles"] = compiles() - compiled
             if counters and min(readings[name]) == readings[name][-1]:
                 profile[name] = counters
             print(f"# pass{pass_i + 1} {name}: {dt:.2f}s"

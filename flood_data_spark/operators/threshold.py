@@ -228,7 +228,8 @@ def ensemble_threshold_summary(forecast_df: DataFrame,
                                group_keys=GROUP_KEYS,
                                join_keys=("latitude", "longitude"),
                                value_col: str = "dis24",
-                               exact_impl: str = "percentile") -> DataFrame:
+                               exact_impl: str = "percentile",
+                               observation=None) -> DataFrame:
     """forecast (1 row per ensemble member) × thresholds → detailed forecast
     (1 row per cell/step) with p_above_Ny and the value 5-number summary.
 
@@ -246,6 +247,11 @@ def ensemble_threshold_summary(forecast_df: DataFrame,
       winner on a few groups past ~100k rows each.
     Both routes are bit-identical (pinned in tests/test_threshold.py), so
     the choice affects performance only.
+
+    `observation` (a pyspark `Observation`), when given, rides the
+    forecast ⋈ thresholds join and reports `join_rows` and `matched_rows`
+    (rows whose key found a threshold row) at the first action over the
+    result: the fan-out and §1.4 empty-join probes at no extra job.
     """
     if accuracy_mode not in ("approx", "exact"):
         raise ValueError("accuracy_mode must be 'approx' or 'exact'")
@@ -253,8 +259,18 @@ def ensemble_threshold_summary(forecast_df: DataFrame,
         raise ValueError("exact_impl must be 'percentile' or 'ranks'")
     years = threshold_years or DEFAULT_CONFIG.threshold_years
 
-    rhs = F.broadcast(threshold_df) if broadcast_thresholds else threshold_df
+    rhs = threshold_df
+    if observation is not None:
+        # a non-null marker on every threshold row: after the LEFT join it
+        # is null exactly on the rows whose key found no threshold
+        rhs = rhs.withColumn("_matched", F.lit(1))
+    if broadcast_thresholds:
+        rhs = F.broadcast(rhs)
     joined = forecast_df.join(rhs, on=list(join_keys), how="left")
+    if observation is not None:
+        joined = joined.observe(observation,
+                                F.count(F.lit(1)).alias("join_rows"),
+                                F.count("_matched").alias("matched_rows"))
 
     if accuracy_mode == "exact" and exact_impl == "ranks":
         return _exact_summary_via_ranks(joined, group_keys, value_col, years)

@@ -7,9 +7,12 @@ float-key joins going empty (§1.4), a 1:1 join fanning out, nulls leaking
 into key columns.  Same idea here, as reusable check functions that raise
 `PipelineCheckError` with the offending counts.
 
-Each check costs one action (a count / limit-1 scan) on a plan Spark will
-usually have cached or can prune heavily; at 100 TB run them on the
-per-day increment, not the full history.
+The assert_* functions below each cost one action (a count / limit-1
+scan) on a plan Spark will usually have cached or can prune heavily; at
+100 TB run them on the per-day increment, not the full history.  The daily
+pipeline does not pay that: its checks ride the detailed product's own
+plan as `Observation`s, read off the one action that fills its cache, and
+`assert_daily_counts` judges the observed counts.
 """
 
 from __future__ import annotations
@@ -74,6 +77,33 @@ def assert_no_nulls(df: DataFrame, cols, label: str = "table") -> None:
     if bad:
         raise PipelineCheckError(
             f"{label}: null in required column(s) {cs}: {bad[0].asDict()}")
+
+
+def assert_daily_counts(counts: dict) -> None:
+    """Judge the counts DailyForecastPipeline.run(run_checks=True) observes
+    on its forecast scan, threshold side and forecast ⋈ thresholds LEFT
+    join: no null key on either side; a non-empty forecast must match at
+    least one threshold (the §1.4 tripwire — the LEFT join scores an
+    unmatched cell p_above = 0, so key drift is invisible in the output;
+    an empty day partition is routine and passes); and the join must keep
+    one row per forecast row (a duplicated threshold cell fans out and
+    silently skews that cell's p_above_*)."""
+    for side in ("forecast", "threshold"):
+        n = counts[f"{side}_null_keys"]
+        if n:
+            raise PipelineCheckError(
+                f"{side} input: null in required column(s) "
+                f"['latitude', 'longitude'] on {n} row(s)")
+    rows, joined = counts["forecast_rows"], counts["join_rows"]
+    if rows and not counts["matched_rows"]:
+        raise PipelineCheckError(
+            f"forecast ⋈ thresholds (key overlap): {rows} forecast rows "
+            "matched 0 rows — check key rounding/precision on both join "
+            "inputs (SURVEY §1.4)")
+    if joined != rows:
+        raise PipelineCheckError(
+            f"forecast ⋈ thresholds: row count changed {rows} -> {joined} "
+            "(fan-out: a threshold cell appears more than once)")
 
 
 def assert_join_not_empty(df: DataFrame, label: str = "join") -> None:

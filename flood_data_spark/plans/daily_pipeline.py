@@ -29,7 +29,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from flood_data_spark.config import DEFAULT_CONFIG, EngineConfig
 from flood_data_spark.functions.geometry import add_geometry
@@ -42,12 +43,32 @@ from flood_data_spark.operators.summary import (
 )
 from flood_data_spark.operators.tendency import flood_tendency
 from flood_data_spark.operators.threshold import ensemble_threshold_summary
+from flood_data_spark.plans.checks import assert_daily_counts
 
 
 @dataclass
 class DailyProducts:
     detailed: DataFrame
     summary: DataFrame
+    # the QA counts observed by run(run_checks=True), keyed by
+    # _CHECK_COUNTS (see plans.checks.assert_daily_counts), else None
+    checks: dict | None = None
+
+
+_CHECK_COUNTS = ("forecast_rows", "forecast_null_keys", "threshold_null_keys",
+                 "join_rows", "matched_rows")
+
+
+def _observed(obs: Observation) -> dict:
+    """The observation's metrics, or {} when its subtree never ran: adaptive
+    execution drops a plan branch it finds empty at runtime, and the
+    Observation then completes with an empty row (an empty day, where
+    every count is 0)."""
+    return obs.get if obs._jo.getRow().length() else {}
+
+
+def _null_keys():
+    return F.count_if(F.col("latitude").isNull() | F.col("longitude").isNull())
 
 
 class DailyForecastPipeline:
@@ -58,35 +79,53 @@ class DailyForecastPipeline:
 
     def run(self, forecast_df: DataFrame, threshold_df: DataFrame,
             control_df: DataFrame | None = None,
-            cache_detailed: bool = True,
             run_checks: bool = False) -> DailyProducts:
         """forecast + thresholds (+ optional external control) → the two
         published products.  Inputs must already be key-rounded (see
         sources.parquet.read_forecast / read_thresholds).
 
         run_checks=True adds the reference's runtime QA invariants
-        (threshold-data-joining.py:84-100 pattern): non-null keys in, the
-        §1.4 empty-join tripwire, and the 1-row-per-cell summary grain.
-        Costs extra actions — use on the daily increment, not backfills.
+        (threshold-data-joining.py:84-100 pattern) as `Observation`s on
+        the detailed product's own plan: rows in and null keys on the
+        forecast scan, null keys on the threshold side, rows out of the
+        forecast ⋈ thresholds join and how many matched a threshold.  One
+        action fills the detailed cache (the writes reuse it) and reports
+        them; plans.checks.assert_daily_counts raises PipelineCheckError
+        on a null key, the §1.4 empty-join tripwire or a join fan-out (a
+        duplicated threshold cell).  The counts come back on
+        DailyProducts.checks.  Without checks, building fires no job.
         """
         cfg = self.config
+        observed = {}
         if run_checks:
-            from flood_data_spark.plans.checks import (
-                assert_no_nulls,
-                assert_join_not_empty,
-                assert_unique_key,
-            )
-            assert_no_nulls(forecast_df, ["latitude", "longitude"],
-                            label="forecast input")
-            assert_no_nulls(threshold_df, ["latitude", "longitude"],
-                            label="threshold input")
+            observed = {side: Observation()
+                        for side in ("forecast", "thresholds", "join")}
+            forecast_df = forecast_df.observe(
+                observed["forecast"],
+                F.count(F.lit(1)).alias("forecast_rows"),
+                _null_keys().alias("forecast_null_keys"))
+            threshold_df = threshold_df.observe(
+                observed["thresholds"],
+                _null_keys().alias("threshold_null_keys"))
 
         detailed = ensemble_threshold_summary(
             forecast_df, threshold_df,
             threshold_years=cfg.threshold_years,
-            accuracy_mode=self.accuracy_mode)
-        if cache_detailed:
-            detailed = detailed.cache()
+            accuracy_mode=self.accuracy_mode,
+            observation=observed.get("join")).cache()
+
+        checks = None
+        if run_checks:
+            # the one check action: it fills the cache with the detailed
+            # product the writes would compute anyway (a noop write, one
+            # job fewer than count()), and Observation.get blocks until it
+            # has run.  The threshold side reports through its broadcast,
+            # the others through the cached relation.
+            detailed.write.format("noop").mode("overwrite").save()
+            checks = dict.fromkeys(_CHECK_COUNTS, 0)
+            for obs in observed.values():
+                checks.update(_observed(obs))
+            assert_daily_counts(checks)
 
         if control_df is None:
             if not cfg.use_first_as_control:
@@ -116,19 +155,5 @@ class DailyForecastPipeline:
         detailed_out = add_geometry(detailed, cfg.half_grid_size, cfg.precision)
         detailed_out = restrict_detailed_to_summary(detailed_out, summary)
 
-        if run_checks:
-            # J1 is a LEFT join and unmatched cells legitimately score
-            # p_above = 0, so key drift is invisible in the output — the
-            # §1.4 tripwire therefore probes key overlap directly.  Guard
-            # on a non-empty forecast: an empty day partition is routine,
-            # not a rounding bug.
-            if forecast_df.limit(1).count() > 0:
-                assert_join_not_empty(
-                    forecast_df.join(
-                        threshold_df,
-                        on=["latitude", "longitude"], how="left_semi"),
-                    label="forecast ⋈ thresholds (key overlap)")
-            assert_unique_key(summary, ("latitude", "longitude"),
-                              label="summary product")
-
-        return DailyProducts(detailed=detailed_out, summary=summary)
+        return DailyProducts(detailed=detailed_out, summary=summary,
+                             checks=checks)

@@ -1,19 +1,21 @@
 """Building an operator's DataFrame fires no Spark job: the caller names
 the route (exact_impl, nbuckets), so the same plan runs unchanged as a
 batch or an incremental query, and every job belongs to the action that
-consumes the result."""
+consumes the result.  The daily pipeline's QA checks ride the jobs that
+compute the products, and a repeated day reuses its compiled classes."""
 
 from pyspark.sql import functions as F
 
 from flood_data_spark.operators.postprocess import quantile_map
 from flood_data_spark.operators.threshold import ensemble_threshold_summary
 from flood_data_spark.plans.daily_pipeline import DailyForecastPipeline
+from flood_data_spark.sources.parquet import write_parquet
 from tests.test_pipeline import _day
 from tests.test_threshold import _forecast, _thresholds
 
 
 def _jobs_during(spark, group, build):
-    """Job ids that ran in `group` while `build()` returned a DataFrame."""
+    """Job ids that ran in `group` while `build()` ran."""
     sc = spark.sparkContext
     sc.setJobGroup(group, "build only")
     try:
@@ -47,3 +49,35 @@ def test_operators_build_without_jobs(spark):
         accuracy_mode="exact").run(forecast, thresholds, run_checks=False)
     for name, build in builds.items():
         assert _jobs_during(spark, f"build-{name}", build) == [], name
+
+
+def _publish_day(spark, out, run_checks):
+    """One pipeline day and both writes, as the daily job runs them."""
+    forecast, thresholds = _day(spark)
+    products = DailyForecastPipeline(accuracy_mode="exact").run(
+        forecast, thresholds, run_checks=run_checks)
+    write_parquet(products.detailed, str(out / "detailed"))
+    write_parquet(products.summary, str(out / "summary"))
+
+
+def test_checks_ride_the_products_jobs(spark, tmp_path):
+    """The checks' one action fills the detailed cache the writes reuse,
+    so checks on cost at most 2 jobs more than checks off."""
+    jobs = {flag: len(_jobs_during(
+        spark, f"day-checks-{flag}",
+        lambda flag=flag: _publish_day(spark, tmp_path / str(flag), flag)))
+        for flag in (False, True)}
+    assert jobs[True] <= jobs[False] + 2, jobs
+
+
+def test_repeated_day_reuses_compiled_classes(spark, tmp_path):
+    """The session compiles each whole-stage class once: a second identical
+    day compiles (almost) nothing, where the default 100-entry codegen
+    cache and stage-numbered class names recompiled dozens a day."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME().getCount
+    _publish_day(spark, tmp_path / "first", run_checks=True)
+    before = compiles()
+    _publish_day(spark, tmp_path / "second", run_checks=True)
+    assert compiles() - before <= 10

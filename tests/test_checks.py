@@ -60,11 +60,9 @@ def test_compact_partition_reduces_files(spark, tmp_path):
     assert back.agg(F.sum("v")).first()[0] == sum(range(4000))
 
 
-def test_pipeline_run_checks_flag(spark):
+def _checks_day(spark):
     import numpy as np
     import pandas as pd
-
-    from flood_data_spark.plans.daily_pipeline import DailyForecastPipeline
 
     rng = np.random.default_rng(31)
     n = 300
@@ -79,20 +77,66 @@ def test_pipeline_run_checks_flag(spark):
         "latitude": np.round(0.025 + np.arange(5).repeat(5) * 0.05, 3),
         "longitude": np.round(0.025 + np.tile(np.arange(5), 5) * 0.05, 3),
         "threshold_2y": 80.0, "threshold_5y": 160.0, "threshold_20y": 300.0}))
+    return forecast, thresholds
 
-    # green path: checks pass silently
-    products = DailyForecastPipeline(accuracy_mode="exact").run(
+
+def _run_checked(forecast, thresholds):
+    from flood_data_spark.plans.daily_pipeline import DailyForecastPipeline
+
+    return DailyForecastPipeline(accuracy_mode="exact").run(
         forecast, thresholds, run_checks=True)
+
+
+def _null_key_row(df, key):
+    return df.unionByName(
+        df.limit(1).withColumn(key, F.lit(None).cast("double")))
+
+
+def test_pipeline_run_checks_flag(spark):
+    forecast, thresholds = _checks_day(spark)
+
+    # green path: checks pass silently and the observed counts come back
+    products = _run_checked(forecast, thresholds)
     assert products.summary.count() > 0
+    assert products.checks == {
+        "forecast_rows": 300, "forecast_null_keys": 0,
+        "threshold_null_keys": 0, "join_rows": 300, "matched_rows": 300}
 
     # un-rounded keys on one side: the §1.4 tripwire fires
     drifted = forecast.withColumn(
         "latitude", F.col("latitude") + F.lit(1e-7))
     with pytest.raises(PipelineCheckError, match="0 rows"):
-        DailyForecastPipeline(accuracy_mode="exact").run(
-            drifted, thresholds.withColumn(
-                "latitude", F.col("latitude") - F.lit(1e-7)),
-            run_checks=True)
+        _run_checked(drifted, thresholds.withColumn(
+            "latitude", F.col("latitude") - F.lit(1e-7)))
+
+
+def test_pipeline_checks_catch_duplicate_threshold_cell(spark):
+    """A threshold cell listed twice doubles that cell's forecast rows
+    through the LEFT join and skews its p_above_*; the summary stays
+    1 row/cell, so only the join's row count shows it."""
+    forecast, thresholds = _checks_day(spark)
+    planted = thresholds.unionByName(thresholds.limit(1))
+    with pytest.raises(PipelineCheckError, match="fan-out"):
+        _run_checked(forecast, planted)
+
+
+@pytest.mark.parametrize("side", ["forecast", "threshold"])
+def test_pipeline_checks_catch_null_keys(spark, side):
+    forecast, thresholds = _checks_day(spark)
+    if side == "forecast":
+        forecast = _null_key_row(forecast, "latitude")
+    else:
+        thresholds = _null_key_row(thresholds, "longitude")
+    with pytest.raises(PipelineCheckError,
+                       match=f"{side} input: null in required"):
+        _run_checked(forecast, thresholds)
+
+
+def test_pipeline_checks_pass_an_empty_day(spark):
+    forecast, thresholds = _checks_day(spark)
+    products = _run_checked(forecast.filter("latitude > 90"), thresholds)
+    assert products.summary.count() == 0
+    assert set(products.checks.values()) == {0}
 
 
 def test_fast_table_count_metadata_only(spark, tmp_path):
