@@ -400,11 +400,11 @@ def q_nearest_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_morton_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale layout (SURVEY §2.11 / plans.scale.zorder_write): Z-order
+    """Scale layout (SURVEY §2.11 / functions.keys.morton_key): Z-order
     (Morton) key over grid-cell centers — bit-interleaved integer grid
-    indices, the single-column clustering key that makes bbox serving scans
-    prune on both lat and lon at once.  Pure JVM shift/mask Column ops;
-    the DuckDB oracle runs the identical bit arithmetic."""
+    indices, a single-column clustering key under which a sorted layout
+    prunes bbox scans on both lat and lon at once.  Pure JVM shift/mask
+    Column ops; the DuckDB oracle runs the identical bit arithmetic."""
     return (with_morton_key(_grid_cells(spark, sf_dir), resolution=0.05)
             .select("partkey", "latitude", "longitude", "z_key"))
 

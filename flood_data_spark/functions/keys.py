@@ -84,10 +84,10 @@ def morton_key(lat_idx, lon_idx, bias: int = MORTON_BIAS):
     """Z-order (Morton) key: bit-interleave two integer grid indices.
 
     Rows close in 2-D space get numerically close keys, so sorting by this
-    single long clusters both dimensions at once — the layout lever behind
-    `plans.scale.zorder_write`.  Input columns are biased to non-negative
-    before interleaving; the result is deterministic and engine-portable
-    (plain shifts/masks — the DuckDB oracle runs the same expression).
+    single long clusters both dimensions at once.  Input columns are
+    biased to non-negative before interleaving; the result is deterministic
+    and engine-portable (plain shifts/masks — the DuckDB oracle runs the
+    same expression).
     """
     x = (lat_idx + F.lit(bias)).cast("long")
     y = (lon_idx + F.lit(bias)).cast("long")

@@ -10,10 +10,11 @@ keyed by *cell center* (latitude, longitude), so "polygon intersects the
 deflated query box" is exactly "cell center inside the query cell's bounds",
 and the 3×3 neighbor fetch ("intersects the inflated box") is "center within
 one grid step of those bounds".  Both become native ``between`` range
-predicates — Catalyst pushes them into the Parquet scan (row-group min/max
-pruning), so a point lookup against a 100 TB history touches only the
-row groups covering one grid cell.  No geometry parsing, no UDF, no
-collect.
+predicates — Catalyst pushes them into the Parquet scan.  On a table
+sorted by (latitude, longitude), as the daily products are, the reader
+then skips every row group and page whose min/max stats miss the cell,
+but it still opens each file of the table to read those stats (the scan's
+``numFiles`` counts them all).  No geometry parsing, no UDF, no collect.
 
 Boundary semantics match the reference's ``get_grid_cell_bounds``
 (flood-api-examples.py:108-120): a point on a cell edge belongs to the cell

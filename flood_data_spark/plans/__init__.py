@@ -1,16 +1,11 @@
 from flood_data_spark.plans.daily_pipeline import DailyForecastPipeline, DailyProducts
 from flood_data_spark.plans.checks import (
     PipelineCheckError,
-    assert_count_preserved,
     assert_unique_key,
-    assert_no_nulls,
-    assert_join_not_empty,
 )
 from flood_data_spark.plans.scale import (
     bucketed_write,
-    read_bucketed,
     salted_join,
-    sorted_partitioned_write,
     compact_partition,
     join_fanout_report,
     merge_summaries,
@@ -20,9 +15,8 @@ from flood_data_spark.plans.scale import (
 
 __all__ = [
     "DailyForecastPipeline", "DailyProducts",
-    "PipelineCheckError", "assert_count_preserved", "assert_unique_key",
-    "assert_no_nulls", "assert_join_not_empty",
-    "bucketed_write", "read_bucketed", "salted_join", "join_fanout_report",
+    "PipelineCheckError", "assert_unique_key",
+    "bucketed_write", "salted_join", "join_fanout_report",
     "summarize_increment", "merge_summaries", "summary_stats",
-    "sorted_partitioned_write", "compact_partition",
+    "compact_partition",
 ]

@@ -7,11 +7,8 @@ float-key joins going empty (§1.4), a 1:1 join fanning out, nulls leaking
 into key columns.  Same idea here, as reusable check functions that raise
 `PipelineCheckError` with the offending counts.
 
-The assert_* functions below each cost one action (a count / limit-1
-scan) on a plan Spark will usually have cached or can prune heavily; at
-100 TB run them on the per-day increment, not the full history.  The daily
-pipeline does not pay that: its checks ride the detailed product's own
-plan as `Observation`s, read off the one action that fills its cache, and
+The daily pipeline's checks ride the detailed product's own plan as
+`Observation`s, read off the one action that fills its cache, and
 `assert_daily_counts` judges the observed counts.
 """
 
@@ -43,17 +40,6 @@ def fast_table_count(spark, path: str) -> int:
     return s2.read.parquet(path).count()
 
 
-def assert_count_preserved(before: DataFrame, after: DataFrame,
-                           label: str = "join") -> None:
-    """1:1 joins and projections must not change cardinality (the
-    reference's pre/post-join equality asserts)."""
-    nb, na = before.count(), after.count()
-    if nb != na:
-        raise PipelineCheckError(
-            f"{label}: row count changed {nb} -> {na} "
-            f"({'fan-out' if na > nb else 'row loss'})")
-
-
 def assert_unique_key(df: DataFrame, keys, label: str = "table") -> None:
     """The grain claim: at most one row per key (e.g. summary = 1 row/cell)."""
     cols = [keys] if isinstance(keys, str) else list(keys)
@@ -63,20 +49,6 @@ def assert_unique_key(df: DataFrame, keys, label: str = "table") -> None:
         raise PipelineCheckError(
             f"{label}: duplicate key {tuple(dup[0][c] for c in cols)} "
             f"(x{dup[0]['count']}) violates 1-row-per-{cols} grain")
-
-
-def assert_no_nulls(df: DataFrame, cols, label: str = "table") -> None:
-    """Key/required columns must be fully populated (a null lat/lon would
-    silently drop out of every downstream equi-join)."""
-    cs = [cols] if isinstance(cols, str) else list(cols)
-    pred = None
-    for c in cs:
-        p = F.col(c).isNull()
-        pred = p if pred is None else (pred | p)
-    bad = df.filter(pred).limit(1).collect()
-    if bad:
-        raise PipelineCheckError(
-            f"{label}: null in required column(s) {cs}: {bad[0].asDict()}")
 
 
 def assert_daily_counts(counts: dict) -> None:
@@ -104,12 +76,3 @@ def assert_daily_counts(counts: dict) -> None:
         raise PipelineCheckError(
             f"forecast ⋈ thresholds: row count changed {rows} -> {joined} "
             "(fan-out: a threshold cell appears more than once)")
-
-
-def assert_join_not_empty(df: DataFrame, label: str = "join") -> None:
-    """The §1.4 tripwire: a rounded-float-key join that produces zero rows
-    almost always means the rounding discipline was skipped on one side."""
-    if not df.limit(1).collect():
-        raise PipelineCheckError(
-            f"{label}: produced 0 rows — check key rounding/precision on "
-            "both join inputs (SURVEY §1.4)")

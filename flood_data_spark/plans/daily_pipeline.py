@@ -14,7 +14,7 @@ SURVEY.md §3) as one composable pipeline over DataFrames:
       │                      │
       └────── left_semi ◄─ summary = tendency ⋈ intensity ⋈ peak
                                │ (drop gray, add WKT geometry)
-                          detailed' + summary  → parquet sinks
+               detailed' + summary ─ sort by (issued_on, lat, lon) → sinks
 
 Plan-shape notes vs the reference (SURVEY §4):
 - no manual repartition(100, lat, lon): AQE + broadcast thresholds leave a
@@ -22,7 +22,12 @@ Plan-shape notes vs the reference (SURVEY §4):
   per-cell summary aggregates reuse that partitioning;
 - `.cache()` of the detailed product is kept (feeds 4 consumers, reference
   :169);
-- exact/approx percentile switch surfaced (exact for oracle parity).
+- exact/approx percentile switch surfaced (exact for oracle parity);
+- both products end in the reference's sort before save
+  (threshold-data-joining.py:120), led by the run's one issued_on: one
+  range exchange each, whose sample runs with the write, so every file and
+  row group of a written product covers a narrow latitude band and a
+  lookup's range predicate skips the rest.
 """
 
 from __future__ import annotations
@@ -155,5 +160,10 @@ class DailyForecastPipeline:
         detailed_out = add_geometry(detailed, cfg.half_grid_size, cfg.precision)
         detailed_out = restrict_detailed_to_summary(detailed_out, summary)
 
-        return DailyProducts(detailed=detailed_out, summary=summary,
-                             checks=checks)
+        # issued_on (one value per run) leads: a write partitioned by it
+        # (upsert_partitions) then needs no sort of its own.  The local sort
+        # Spark adds otherwise makes the optimizer drop this sort's order
+        # and keep only its range partitioning.
+        order = ("issued_on", "latitude", "longitude")
+        return DailyProducts(detailed=detailed_out.orderBy(*order),
+                             summary=summary.orderBy(*order), checks=checks)

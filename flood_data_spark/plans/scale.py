@@ -6,20 +6,21 @@ longitude)`` on every join input (databricks/glofas-forecast-computation.py:
 as a full shuffle on every run.  This module provides the Spark-native
 replacements:
 
-- **Bucketed storage** (`bucketed_write` / `read_bucketed`): persist the big
-  per-cell tables bucketed by the grid key so every downstream equi-join or
-  groupBy on that key is co-located — the shuffle is paid ONCE at write time
-  and amortized over every subsequent query.  This is the 1000-executor
-  answer to the reference's per-run repartition.
+- **Bucketed storage** (`bucketed_write`): persist the big per-cell
+  tables bucketed by the grid key so every downstream equi-join or groupBy
+  on that key is co-located — the shuffle is paid ONCE at write time and
+  amortized over every subsequent query (read back with `spark.table`).
+  This is the 1000-executor answer to the reference's per-run repartition.
 - **Salted joins** (`salted_join`): grid workloads skew (dense river networks
   concentrate cells; a hot ensemble date concentrates rows).  AQE skew-join
   splitting (on in our session factory) handles sort-merge skew at runtime;
   salting is the declarative fallback when one key dominates a
   non-broadcastable join.
-- **Layout-aware writes** (`sorted_partitioned_write`): the reference sorts
-  globally before save (threshold-data-joining.py:120) — a full range
-  shuffle.  `sortWithinPartitions` gets the same parquet min/max row-group
-  pruning for lat/lon predicates without the extra exchange.
+
+The reference's sort before save (threshold-data-joining.py:120) is not a
+writer here: the daily products themselves end in that sort, by
+(issued_on, latitude, longitude) (`plans.daily_pipeline`), so every writer
+of them gets a layout whose row-group min/max stats prune a lookup.
 """
 
 from __future__ import annotations
@@ -46,11 +47,6 @@ def bucketed_write(df: DataFrame, table_name: str, bucket_cols,
     if path:
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table_name)
-
-
-def read_bucketed(spark, table_name: str) -> DataFrame:
-    """Read a table written by `bucketed_write`, bucketing metadata intact."""
-    return spark.table(table_name)
 
 
 def salted_join(large: DataFrame, small: DataFrame, on,
@@ -212,53 +208,6 @@ def compact_partition(spark, path: str, target_file_bytes: int = 128 * 1024 * 10
     fs.rename(jvm.org.apache.hadoop.fs.Path(staging), hpath)
     fs.delete(rpath, True)
     return n_files
-
-
-def zorder_write(df: DataFrame, path: str, num_files: int,
-                 resolution: float | None = None,
-                 lat_col: str = "latitude", lon_col: str = "longitude",
-                 mode: str = "overwrite") -> None:
-    """Z-order-clustered parquet write for 2-D (lat, lon) lookup tables.
-
-    Range-partition + locally sort by the Morton key of the grid indices:
-    each output file then covers a compact 2-D tile, so parquet min/max
-    stats on BOTH lat and lon become selective simultaneously — a bbox
-    serving query (`operators/serving.py`) skips every file outside the
-    box, where a lat-major sort (`sorted_partitioned_write`) prunes only
-    the leading column and a bbox scan still touches one thin stripe of
-    files per latitude band.
-
-    One range exchange at write time (same cost class as the reference's
-    global pre-save sort, threshold-data-joining.py:120), amortized over
-    every subsequent serving read.  The key column is dropped from the
-    persisted schema — it is derivable, and keeping predicates on the
-    natural lat/lon columns lets stock pushdown do the pruning with no
-    reader-side cooperation.
-    """
-    from flood_data_spark.functions.keys import with_morton_key
-
-    keyed = with_morton_key(df, resolution, lat_col, lon_col, out_col="_zk")
-    (keyed.repartitionByRange(num_files, "_zk")
-     .sortWithinPartitions("_zk")
-     .drop("_zk")
-     .write.mode(mode).parquet(path))
-
-
-def sorted_partitioned_write(df: DataFrame, path: str, partition_by=None,
-                             sort_cols=("latitude", "longitude"),
-                             mode: str = "overwrite") -> None:
-    """Parquet write with in-partition ordering on the lookup keys.
-
-    Equivalent pruning benefit to the reference's global pre-save sort
-    (row-group min/max stats become selective for lat/lon predicates) at the
-    cost of a local sort only — no range-partitioning exchange.
-    """
-    out = df.sortWithinPartitions(*sort_cols) if sort_cols else df
-    writer = out.write.mode(mode)
-    if partition_by:
-        pb = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-        writer = writer.partitionBy(*pb)
-    writer.parquet(path)
 
 
 def summarize_increment(df: DataFrame, group_cols, value_col: str) -> DataFrame:

@@ -10,10 +10,10 @@ Reference behaviors preserved:
   :276-280; raster_converter.py:8-11).
 
 Scale posture beyond the reference: writers can partition by `issued_on`
-(daily batches prune to one folder) and optionally sort within partitions by
-(latitude, longitude) for row-group min/max locality — the distributed
-equivalent of the reference's driver-side global sort-before-save
-(threshold-data-joining.py:120) without the global range shuffle.
+(daily batches prune to one folder).  Writers add no sort of their own:
+the daily products arrive sorted by (issued_on, latitude, longitude), the
+reference's sort before save (threshold-data-joining.py:120), so their
+row-group min/max stats are selective for lookups.
 """
 
 from __future__ import annotations
@@ -54,10 +54,7 @@ def read_control(spark: SparkSession, path: str,
 
 def write_parquet(df: DataFrame, path: str,
                   mode: str = "overwrite",
-                  partition_by: list | None = None,
-                  sort_within_partitions: list | None = None) -> None:
-    if sort_within_partitions:
-        df = df.sortWithinPartitions(*sort_within_partitions)
+                  partition_by: list | None = None) -> None:
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

@@ -174,22 +174,17 @@ def test_quantized_topk_prunes_topk_before_exchange(spark):
     assert "WindowGroupLimit" in head and "Partial" in head
 
 
-def test_zorder_write_plan_single_range_exchange(spark, tmp_path):
-    """zorder_write = exactly one rangepartitioning exchange (the clustering
-    shuffle) + local sort; a second exchange means the write is paying the
-    layout twice."""
-    from flood_data_spark.functions.keys import with_morton_key
+def test_products_plan_single_range_exchange(spark):
+    """Each daily product carries exactly one rangepartitioning exchange:
+    its (issued_on, latitude, longitude) sort before save.  A second one
+    means the layout is paid twice."""
+    from flood_data_spark.plans.daily_pipeline import DailyForecastPipeline
+    from tests.test_pipeline import _day
 
-    grid = spark.range(1000).select(
-        (F.col("id") % 40 * 0.05 + 0.025).alias("latitude"),
-        (F.floor(F.col("id") / 40) * 0.05 + 0.025).alias("longitude"))
-    keyed = (with_morton_key(grid, resolution=0.05, out_col="_zk")
-             .repartitionByRange(8, "_zk")
-             .sortWithinPartitions("_zk")
-             .drop("_zk"))
-    plan = keyed._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange rangepartitioning") == 1
-    assert plan.count("Exchange hashpartitioning") == 0
+    products = DailyForecastPipeline(accuracy_mode="exact").run(*_day(spark))
+    for df in (products.detailed, products.summary):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange rangepartitioning") == 1, plan
 
 
 def test_ivf_probe_gets_dynamic_partition_pruning(spark, tmp_path):

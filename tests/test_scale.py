@@ -1,15 +1,10 @@
 """Scale-posture tests: salted joins preserve semantics, bucketed tables
-join without a shuffle, sorted writes keep pruning-friendly layout."""
+join without a shuffle, partitioned writes prune by date."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from flood_data_spark.plans.scale import (
-    bucketed_write,
-    read_bucketed,
-    salted_join,
-    sorted_partitioned_write,
-)
+from flood_data_spark.plans.scale import bucketed_write, salted_join
 
 
 @pytest.fixture()
@@ -68,8 +63,8 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            joined = read_bucketed(spark, "t_bleft").join(
-                read_bucketed(spark, "t_bright"), "cell")
+            joined = spark.table("t_bleft").join(
+                spark.table("t_bright"), "cell")
             plan = joined._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in plan, plan
             assert joined.count() == 500
@@ -80,14 +75,15 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_bright")
 
 
-def test_sorted_partitioned_write_layout(spark, tmp_path):
+def test_partitioned_write_prunes_by_date(spark, tmp_path):
+    from flood_data_spark.sources.parquet import write_parquet
+
     df = spark.createDataFrame(
         [(0.075, 0.025, "2024-01-01", 1.0),
          (0.025, 0.125, "2024-01-01", 2.0),
          (0.025, 0.025, "2024-01-02", 3.0)],
         "latitude double, longitude double, issued_on string, v double")
-    sorted_partitioned_write(df, str(tmp_path / "out"),
-                             partition_by="issued_on")
+    write_parquet(df, str(tmp_path / "out"), partition_by=["issued_on"])
     back = spark.read.parquet(str(tmp_path / "out"))
     assert back.count() == 3
     # partition pruning: only day-2 files scanned for the date predicate

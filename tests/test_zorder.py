@@ -1,9 +1,5 @@
-"""Z-order layout: Morton key correctness against a pure-Python reference,
-and the actual pruning payoff — a bbox scan over a z-order-clustered layout
-surfaces far fewer rows from the parquet reader (row-group min/max skipping
-on BOTH lat and lon) than the same scan over a hash-shuffled layout."""
+"""Morton (Z-order) key correctness against a pure-Python reference."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from flood_data_spark.functions.keys import (
@@ -11,7 +7,6 @@ from flood_data_spark.functions.keys import (
     morton_key,
     with_morton_key,
 )
-from flood_data_spark.plans.scale import zorder_write
 
 
 def _py_part1by1(x: int) -> int:
@@ -58,57 +53,3 @@ def test_with_morton_key_neighbor_cells_are_key_adjacent(spark):
     base = rows[(0.025, 0.025)]
     assert rows[(0.025, 0.075)] == base + 2  # lon bit is the ×2 lane
     assert rows[(0.075, 0.025)] == base + 1  # lat bit is the ×1 lane
-
-
-def _scan_output_rows(df) -> int:
-    """Rows the parquet reader actually surfaced (post row-group pruning):
-    the scan leaf's numOutputRows metric after executing the plan."""
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan()
-    leaves = plan.collectLeaves()
-    scan = leaves.apply(0)
-    return scan.metrics().apply("numOutputRows").value()
-
-
-@pytest.fixture(scope="module")
-def grid_df(spark):
-    # 240×240 cell grid, one row per cell, centers at (k + .5) * 0.05
-    n = 240
-    return (spark.range(n * n).select(
-        F.round((F.col("id") % n) * 0.05 + 0.025, 3).alias("latitude"),
-        F.round(F.floor(F.col("id") / n) * 0.05 + 0.025, 3).alias("longitude"),
-        (F.col("id") * 2).cast("double").alias("val")))
-
-
-def test_zorder_layout_prunes_bbox_scan(spark, grid_df, tmp_path_factory):
-    tmp = tmp_path_factory.mktemp("zorder")
-    z_path, shuf_path = str(tmp / "z"), str(tmp / "shuffled")
-    zorder_write(grid_df, z_path, num_files=64, resolution=0.05)
-    # adversarial baseline: same data, same file count, hash-scattered
-    grid_df.repartition(64).write.mode("overwrite").parquet(shuf_path)
-
-    bbox = ((F.col("latitude").between(3.0, 4.0))
-            & (F.col("longitude").between(3.0, 4.0)))
-    z_scan = spark.read.parquet(z_path).filter(bbox)
-    s_scan = spark.read.parquet(shuf_path).filter(bbox)
-
-    # identical answers
-    assert (sorted(map(tuple, z_scan.collect()))
-            == sorted(map(tuple, s_scan.collect())))
-
-    z_rows = _scan_output_rows(z_scan)
-    s_rows = _scan_output_rows(s_scan)
-    total = grid_df.count()
-    # hash layout: every file spans the whole key range -> reader surfaces
-    # ~all rows; z-order: only the tiles intersecting the box survive the
-    # row-group min/max check
-    assert s_rows == total
-    assert z_rows < total / 4, (z_rows, total)
-
-
-def test_zorder_write_roundtrip_preserves_rows(spark, grid_df, tmp_path):
-    path = str(tmp_path / "z2")
-    zorder_write(grid_df, path, num_files=4, resolution=0.05)
-    back = spark.read.parquet(path)
-    assert back.count() == grid_df.count()
-    assert sorted(back.columns) == sorted(grid_df.columns)
