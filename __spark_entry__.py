@@ -271,8 +271,8 @@ def q_intensity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_peak_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.5 W1 + §2.4 A4: per-order peak line (argmax by severity
-    then price, deterministic step tiebreak), early-window max as a shared
-    window aggregate, BB/GC/GB ladder."""
+    then price, deterministic step tiebreak) and early-window max, both
+    aggregates of one group-by, BB/GC/GB ladder."""
     p2 = F.least(F.lit(1.0), F.col("l_discount") * 12)
     detailed = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("orderkey"),

@@ -619,15 +619,15 @@ def _q_threshold_summary_x100(spark, sf_dir):
 
 def _q_daily_pipeline_x10(spark, sf_dir):
     """The FULL E1 daily pipeline (plans/daily_pipeline.py) on the
-    6M-row tier — detailed exceedance product + control extraction +
-    tendency/intensity/peak + 3-way assembly + WKT geometry + the
-    summary semi-join back onto detailed, all ONE plan, materialized
+    6M-row tier — detailed exceedance product + the one per-cell
+    summary aggregate (control, tendency, intensity, peak) + WKT geometry
+    + the summary semi-join back onto detailed, all ONE plan, materialized
     through the restricted detailed product (which consumes every
     upstream stage).  The registry gate (q_summary_forecast) checks E1
     correctness at 1x; this tier shows where exchange pressure lands
     when every stage sees 10x the cells: the detailed cache fill (the
     only corpus-sized exchange — everything downstream reuses its
-    (lat,lon)-cell partitioning) and the three per-cell aggregates over
+    (lat,lon)-cell partitioning) and the per-cell summary aggregate over
     the cached relation."""
     from pyspark.sql import functions as F
     from flood_data_spark.plans.daily_pipeline import DailyForecastPipeline
@@ -665,8 +665,8 @@ def _q_daily_pipeline_x100(spark, sf_dir):
     just its hottest stage.  Which exchange saturates first at 100x:
     the detailed cache fill — the one corpus-sized exchange (60M rows
     hash-partitioned by (lat,lon) into the exact-percentile
-    ObjectHashAggregate) — everything downstream (control extraction,
-    tendency/intensity/peak, assembly, geometry, semi-join) reuses its
+    ObjectHashAggregate) — everything downstream (the per-cell summary
+    aggregate, geometry, semi-join) reuses its
     40k-cell partitioning, so downstream cost grows with CELLS (40k,
     constant across tiers), not rows.  Same 200x200 grid as x10: 100x
     the members per cell, the growth mode a bigger GloFAS ensemble
@@ -849,9 +849,9 @@ def _q_crawl_pipeline_full(spark, sf_dir):
 
 
 def _q_peak_timing_x10(spark, sf_dir):
-    """Flagship peak-timing window query on the 6M-row tier: 10x the
-    orders (groups), same per-order series length — the shared-exchange
-    window plan's scaling mode at 100 TB."""
+    """Flagship peak-timing query on the 6M-row tier: 10x the orders
+    (groups), same per-order series length — the one-aggregate plan's
+    scaling mode at 100 TB."""
     from pyspark.sql import functions as F
     from flood_data_spark.operators.peak_timing import flood_peak_timing
     p2 = F.least(F.lit(1.0), F.col("l_discount") * 12)

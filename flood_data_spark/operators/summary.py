@@ -1,18 +1,16 @@
-"""Summary-forecast assembly (SURVEY.md §3 E1 steps 5-7).
+"""Summary-forecast pieces (SURVEY.md §3 E1 steps 5-7).
 
 Parity with reference databricks/glofas-forecast-computation.py:179-242:
 control extraction, the 3-way (tendency ⋈ intensity ⋈ peak-timing) join, the
 gray-cell filter, and the restriction of the detailed product to summary
-cells.
+cells.  The daily pipeline computes control and the three classifiers in
+one per-cell aggregate instead (plans/daily_pipeline.py); the control and
+the join stay here for callers that compose the classifiers themselves.
 
-Spark-first differences:
-- the restriction join is written as an explicit `left_semi` (the reference
-  spells it select(lat,lon) + inner join, :240-242 — identical semantics
-  because summary is 1 row/cell, but semi-join states intent and lets the
-  optimizer drop the payload columns);
-- all three summary inputs are 1-row-per-cell aggregates of the same cached
-  detail; Catalyst/AQE handles their co-partitioning (the three groupBys
-  share the (lat,lon) hash partitioning, so the joins are shuffle-free).
+The restriction join is an explicit `left_semi` (the reference spells it
+select(lat,lon) + inner join, :240-242 — identical semantics because
+summary is 1 row/cell, but semi-join states intent and lets the optimizer
+drop the payload columns).
 """
 
 from __future__ import annotations

@@ -23,33 +23,30 @@ from pyspark.sql import functions as F
 from flood_data_spark.config import DEFAULT_CONFIG
 
 
+def tendency_columns(control="control_dis", tendencies: dict | None = None,
+                     up_factor: float | None = None,
+                     down_factor: float | None = None,
+                     col_name: str = "tendency") -> list:
+    """The per-cell aggregates, then the ladder over them: columns for one
+    `groupBy(cell).agg`.  The control discharge is the per-cell minimum of
+    `control` (a column name or expression)."""
+    t = tendencies or DEFAULT_CONFIG.tendencies
+    up = up_factor if up_factor is not None else DEFAULT_CONFIG.tendency_up_factor
+    down = down_factor if down_factor is not None else DEFAULT_CONFIG.tendency_down_factor
+    hi, lo, ctl = F.max("median_dis"), F.min("median_dis"), F.min(control)
+    label = (F.when(hi > ctl * up, t["increasing"])
+              .when((lo <= ctl * down) & (hi <= ctl * up), t["decreasing"])
+              .otherwise(t["stagnant"]))
+    return [hi.alias("max_median_dis"), lo.alias("min_median_dis"),
+            ctl.alias("control_dis"), F.max("max_dis").alias("max_max_dis"),
+            F.min("min_dis").alias("min_min_dis"), label.alias(col_name)]
+
+
 def flood_tendency(detailed_with_control: DataFrame,
                    tendencies: dict | None = None,
                    up_factor: float | None = None,
                    down_factor: float | None = None,
                    col_name: str = "tendency",
                    key_cols=("latitude", "longitude")) -> DataFrame:
-    t = tendencies or DEFAULT_CONFIG.tendencies
-    up = up_factor if up_factor is not None else DEFAULT_CONFIG.tendency_up_factor
-    down = down_factor if down_factor is not None else DEFAULT_CONFIG.tendency_down_factor
-
-    per_cell = (
-        detailed_with_control
-        .groupBy(*key_cols)
-        .agg(
-            F.max("median_dis").alias("max_median_dis"),
-            F.min("median_dis").alias("min_median_dis"),
-            F.min("control_dis").alias("control_dis"),
-            F.max("max_dis").alias("max_max_dis"),
-            F.min("min_dis").alias("min_min_dis"),
-        )
-    )
-    label = (
-        F.when(F.col("max_median_dis") > F.col("control_dis") * up,
-               t["increasing"])
-         .when((F.col("min_median_dis") <= F.col("control_dis") * down)
-               & (F.col("max_median_dis") <= F.col("control_dis") * up),
-               t["decreasing"])
-         .otherwise(t["stagnant"])
-    )
-    return per_cell.withColumn(col_name, label)
+    return detailed_with_control.groupBy(*key_cols).agg(*tendency_columns(
+        "control_dis", tendencies, up_factor, down_factor, col_name))

@@ -7,21 +7,21 @@ SURVEY.md §3) as one composable pipeline over DataFrames:
       │
       ├─⋈ thresholds (broadcast) ─ exceedance + 5-number agg → detailed  [cache]
       │                                                         │
-      │               ┌─ control (step-1 median | external) ←───┤
-      │               ├─ tendency  (per-cell agg + ladder) ←────┤
-      │               ├─ intensity (per-cell agg + ladder) ←────┤
-      │               └─ peak timing (windows, shared shuffle) ←┘
+      │   one groupBy(lat, lon): control (step-1 median         │
+      │   | external, left-joined first), tendency, intensity,  │
+      │   peak timing (struct argmax) ←─────────────────────────┘
       │                      │
-      └────── left_semi ◄─ summary = tendency ⋈ intensity ⋈ peak
-                               │ (drop gray, add WKT geometry)
+      └────── left_semi ◄─ summary (drop null keys and gray, add WKT)
+                               │
                detailed' + summary ─ sort by (issued_on, lat, lon) → sinks
 
 Plan-shape notes vs the reference (SURVEY §4):
 - no manual repartition(100, lat, lon): AQE + broadcast thresholds leave a
-  single (lat,lon,...)-keyed exchange feeding the detailed agg, and the three
-  per-cell summary aggregates reuse that partitioning;
-- `.cache()` of the detailed product is kept (feeds 4 consumers, reference
-  :169);
+  single (lat,lon,...)-keyed exchange feeding the detailed agg; the summary
+  is one more (lat, lon) exchange of per-cell partials, where the
+  reference's three classifiers and their joins each shuffle;
+- `.cache()` of the detailed product is kept (feeds the summary aggregate
+  and the restricted detailed product, reference :169);
 - exact/approx percentile switch surfaced (exact for oracle parity);
 - both products end in the reference's sort before save
   (threshold-data-joining.py:120), led by the run's one issued_on: one
@@ -39,14 +39,10 @@ from pyspark.sql import functions as F
 
 from flood_data_spark.config import DEFAULT_CONFIG, EngineConfig
 from flood_data_spark.functions.geometry import add_geometry
-from flood_data_spark.operators.intensity import flood_intensity
-from flood_data_spark.operators.peak_timing import flood_peak_timing
-from flood_data_spark.operators.summary import (
-    assemble_summary,
-    control_from_detailed,
-    restrict_detailed_to_summary,
-)
-from flood_data_spark.operators.tendency import flood_tendency
+from flood_data_spark.operators.intensity import intensity_columns
+from flood_data_spark.operators.peak_timing import peak_timing_columns
+from flood_data_spark.operators.summary import restrict_detailed_to_summary
+from flood_data_spark.operators.tendency import tendency_columns
 from flood_data_spark.operators.threshold import ensemble_threshold_summary
 from flood_data_spark.plans.checks import assert_daily_counts
 
@@ -132,29 +128,35 @@ class DailyForecastPipeline:
                 checks.update(_observed(obs))
             assert_daily_counts(checks)
 
+        keys = ["latitude", "longitude"]
+        cells = detailed
         if control_df is None:
             if not cfg.use_first_as_control:
                 raise ValueError(
                     "config.use_first_as_control is False but no external "
                     "control DataFrame was provided")
-            control = control_from_detailed(detailed)
+            control = F.when(F.col("step") == 1, F.col("median_dis"))
         else:
-            control = control_df
+            cells = detailed.join(control_df.select(*keys, "control_dis"),
+                                  on=keys, how="left")
+            control = "control_dis"
 
-        detailed_with_control = detailed.join(
-            control, on=["latitude", "longitude"], how="left")
-
-        tendency = flood_tendency(detailed_with_control, cfg.tendencies,
-                                  cfg.tendency_up_factor, cfg.tendency_down_factor)
-        intensity = flood_intensity(detailed, cfg.intensities,
-                                    cfg.intensity_prob_threshold)
-        peak = flood_peak_timing(detailed, cfg.peak_timings,
-                                 cfg.intensity_prob_threshold,
-                                 cfg.peak_early_window,
-                                 cfg.peak_black_border_window)
-
-        summary = assemble_summary(tendency, intensity, peak,
-                                   drop_gray=True, intensities=cfg.intensities)
+        # one aggregate per cell; a null key matches no cell, as in the
+        # reference's joins
+        summary = (
+            cells.filter(F.col("latitude").isNotNull()
+                         & F.col("longitude").isNotNull())
+            .groupBy(*keys)
+            .agg(*peak_timing_columns(cfg.peak_timings,
+                                      cfg.intensity_prob_threshold,
+                                      cfg.peak_early_window,
+                                      cfg.peak_black_border_window),
+                 *tendency_columns(control, cfg.tendencies,
+                                   cfg.tendency_up_factor,
+                                   cfg.tendency_down_factor),
+                 *intensity_columns(cfg.intensities,
+                                    cfg.intensity_prob_threshold))
+            .filter(F.col("intensity") != cfg.intensities["gray"]))
         summary = add_geometry(summary, cfg.half_grid_size, cfg.precision)
 
         detailed_out = add_geometry(detailed, cfg.half_grid_size, cfg.precision)

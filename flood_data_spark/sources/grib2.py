@@ -528,7 +528,7 @@ def grib2_to_dataframe(content: bytes, *,
     contract: (number, latitude, longitude, time, step, valid_time, dis24).
     Row order per message is the grid scan order (i fastest), members in
     message order — the cfgrib flattening."""
-    frames = []
+    parts = []
     for msg in _iter_messages(content):
         m = _decode_message(msg)
         if m.get("spectral"):
@@ -540,7 +540,7 @@ def grib2_to_dataframe(content: bytes, *,
         if member_filter == "pf" and m["number"] == 0:
             continue
         nj, ni = len(m["lats"]), len(m["lons"])
-        frames.append(pd.DataFrame({
+        parts.append({
             "number": np.full(ni * nj, m["number"], dtype=np.int64),
             "latitude": np.repeat(m["lats"], ni),
             "longitude": np.tile(m["lons"], nj),
@@ -549,12 +549,18 @@ def grib2_to_dataframe(content: bytes, *,
             "valid_time": np.full(ni * nj, m["time"] + m["step"],
                                   dtype=np.int64),
             "dis24": m["values"].astype(np.float32),
-        }))
-    if not frames:
-        return pd.DataFrame({c: [] for c in ["number", "latitude",
-                                             "longitude", "time", "step",
-                                             "valid_time", "dis24"]})
-    return pd.concat(frames, ignore_index=True)
+        })
+    return _one_frame(parts, ["number", "latitude", "longitude", "time",
+                              "step", "valid_time", "dis24"])
+
+
+def _one_frame(parts: list, columns: list) -> pd.DataFrame:
+    """Per-message column arrays → one DataFrame per file: each column is
+    concatenated once, not a frame built per message and then concat'd."""
+    if not parts:
+        return pd.DataFrame({c: [] for c in columns})
+    return pd.DataFrame({c: np.concatenate([p[c] for p in parts])
+                         for c in columns})
 
 
 def spectral_to_dataframe(content: bytes, *,
@@ -565,7 +571,7 @@ def spectral_to_dataframe(content: bytes, *,
     time, step, valid_time, c_real, c_imag), one row per (m, n)
     spherical-harmonic pair in the mode-1 ordering.  The spectral twin
     of `grib2_to_dataframe`'s raster contract."""
-    frames = []
+    parts = []
     for msg in _iter_messages(content):
         d = _decode_message(msg)
         if not d.get("spectral"):
@@ -578,7 +584,7 @@ def spectral_to_dataframe(content: bytes, *,
             continue
         pairs = d["values"].reshape(-1, 2)
         npair = len(d["m"])
-        frames.append(pd.DataFrame({
+        parts.append({
             "number": np.full(npair, d["number"], dtype=np.int64),
             "m": d["m"],
             "n": d["n"],
@@ -588,12 +594,9 @@ def spectral_to_dataframe(content: bytes, *,
                                   dtype=np.int64),
             "c_real": pairs[:, 0],
             "c_imag": pairs[:, 1],
-        }))
-    if not frames:
-        return pd.DataFrame({c: [] for c in
-                             ["number", "m", "n", "time", "step",
-                              "valid_time", "c_real", "c_imag"]})
-    return pd.concat(frames, ignore_index=True)
+        })
+    return _one_frame(parts, ["number", "m", "n", "time", "step",
+                              "valid_time", "c_real", "c_imag"])
 
 
 def _spectral_s3(j: int, k: int | None = None,

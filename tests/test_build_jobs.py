@@ -2,7 +2,8 @@
 the route (exact_impl, nbuckets), so the same plan runs unchanged as a
 batch or an incremental query, and every job belongs to the action that
 consumes the result.  The daily pipeline's QA checks ride the jobs that
-compute the products, and a repeated day reuses its compiled classes."""
+compute the products, a day's publish fires a pinned number of jobs, and
+a repeated day reuses its compiled classes."""
 
 from pyspark.sql import functions as F
 
@@ -68,6 +69,16 @@ def test_checks_ride_the_products_jobs(spark, tmp_path):
         lambda flag=flag: _publish_day(spark, tmp_path / str(flag), flag)))
         for flag in (False, True)}
     assert jobs[True] <= jobs[False] + 2, jobs
+
+
+def test_publish_day_job_count(spark, tmp_path):
+    """A checked day and both writes: the summary is one per-cell
+    aggregate over the cached detailed product, not three classifiers
+    joined back, so the day fires 13 jobs here where the joined
+    formulation fired 22."""
+    jobs = _jobs_during(spark, "day-job-count",
+                        lambda: _publish_day(spark, tmp_path, True))
+    assert len(jobs) <= 14, jobs
 
 
 def test_repeated_day_reuses_compiled_classes(spark, tmp_path):

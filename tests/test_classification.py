@@ -143,3 +143,64 @@ def test_peak_timing_deterministic_tiebreak(spark):
     series = _flat(30, p2=0.5, med=10.0)
     out = flood_peak_timing(_peak_input(spark, 0.275, series)).first()
     assert out.peak_step == 1
+
+
+def test_peak_timing_matches_window_formulation(spark):
+    """The peak row is the first of ORDER BY condition ASC, median_dis
+    DESC NULLS LAST, step ASC NULLS FIRST per cell (the q_peak_timing
+    oracle shape), on the orderings a per-cell argmax can get wrong."""
+    nan = float("nan")
+    cells = {
+        # severity tie and median tie on steps 4 and 6 → earliest wins
+        0.025: [(1, 0.0, 0.0, 0.5, 3.0), (4, 0.0, 0.5, 0.5, 9.0),
+                (6, 0.0, 0.5, 0.5, 9.0), (9, 0.0, 0.0, 0.0, 20.0)],
+        # the worst severity has a null median: it loses to any value
+        0.075: [(2, 0.9, 0.9, 0.9, None), (5, 0.9, 0.9, 0.9, 1.0),
+                (7, 0.0, 0.0, 0.5, 50.0)],
+        # NaN sorts above every number, so a NaN median wins its tie
+        0.125: [(3, 0.0, 0.5, 0.5, 100.0), (12, 0.0, 0.5, 0.5, nan),
+                (14, 0.0, 0.0, 0.0, nan)],
+        # a null step sorts first among equal (condition, median)
+        0.175: [(1, 0.0, 0.0, 0.5, 8.0), (None, 0.0, 0.0, 0.5, 8.0),
+                (11, 0.0, 0.0, 0.1, 30.0)],
+        # +0.0 and -0.0 are one value: the earlier step wins
+        0.225: [(15, 0.0, 0.0, 0.0, 0.0), (13, 0.0, 0.0, 0.0, -0.0),
+                (2, 0.0, 0.0, 0.0, -1.0)],
+    }
+    issued = D(2024, 1, 1)
+    rows = [(lat, 0.025, issued,
+             None if s is None else issued + datetime.timedelta(days=s - 1),
+             s, p20, p5, p2, med)
+            for lat, series in cells.items()
+            for (s, p20, p5, p2, med) in series]
+    df = spark.createDataFrame(
+        rows, "latitude double, longitude double, issued_on date, "
+              "valid_for date, step int, p_above_20y double, "
+              "p_above_5y double, p_above_2y double, median_dis double")
+    df.createOrReplaceTempView("peak_pin")
+    want = spark.sql("""
+        WITH cond AS (
+            SELECT *, CASE WHEN p_above_20y >= 0.3 THEN 1
+                           WHEN p_above_5y >= 0.3 THEN 2
+                           WHEN p_above_2y >= 0.3 THEN 3
+                           ELSE 4 END AS condition
+            FROM peak_pin),
+        win AS (
+            SELECT *,
+                   row_number() OVER (PARTITION BY latitude, longitude
+                       ORDER BY condition ASC, median_dis DESC NULLS LAST,
+                                step ASC NULLS FIRST) AS rn,
+                   max(CASE WHEN step BETWEEN 1 AND 10 THEN p_above_2y END)
+                       OVER (PARTITION BY latitude, longitude) AS max_2y_start
+            FROM cond)
+        SELECT latitude, longitude, issued_on,
+               step AS peak_step, valid_for AS peak_day,
+               CASE WHEN step BETWEEN 1 AND 3 THEN 'BB'
+                    WHEN step > 10 AND max_2y_start < 0.30 THEN 'GC'
+                    ELSE 'GB' END AS peak_timing
+        FROM win WHERE rn = 1""")
+    got = flood_peak_timing(df)
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())
+    peaks = {r.latitude: r.peak_step for r in got.collect()}
+    assert peaks == {0.025: 4, 0.075: 5, 0.125: 12, 0.175: None, 0.225: 13}

@@ -187,6 +187,23 @@ def test_products_plan_single_range_exchange(spark):
         assert plan.count("Exchange rangepartitioning") == 1, plan
 
 
+def test_summary_plan_is_one_cell_aggregate(spark):
+    """The summary is one (latitude, longitude) aggregate over the cached
+    detailed product: above the cache, one hash exchange and no window
+    or sort-merge join (the joined per-classifier formulation planned
+    3-4 hash exchanges and a window sort)."""
+    from flood_data_spark.plans.daily_pipeline import DailyForecastPipeline
+    from tests.test_pipeline import _day
+
+    summary = DailyForecastPipeline(accuracy_mode="exact").run(
+        *_day(spark)).summary
+    plan = summary._jdf.queryExecution().executedPlan().toString()
+    above_cache = plan.split("InMemoryRelation")[0]
+    assert "Window" not in above_cache, plan
+    assert "SortMergeJoin" not in above_cache, plan
+    assert above_cache.count("Exchange hashpartitioning") == 1, plan
+
+
 def test_ivf_probe_gets_dynamic_partition_pruning(spark, tmp_path):
     """Probing a lists table persisted partitionBy(list_id): the broadcast
     probe side must inject a dynamic-partition-pruning filter into the lists

@@ -357,8 +357,8 @@ def test_dm_hac_zero_variance_null(spark):
 
 def test_operators_index_covers_registry():
     """OPERATORS.md must list exactly the live registry's gates with
-    the live oracle classes — regenerating must be a no-op on the
-    name/oracle columns, so the index cannot go stale."""
+    the live oracle classes, and regenerating it must be a no-op, so
+    neither the index nor its file:line anchors can go stale."""
     import os
     import re
     import sys
@@ -380,6 +380,13 @@ def test_operators_index_covers_registry():
         assert oracle == want, (name, oracle, want)
     # the committed count line matches too
     assert f"**{len(queries)}** gates" in md
+    # and so does every other cell: run scripts/gen_operators_index.py
+    sys.path.insert(0, os.path.join(repo, "scripts"))
+    from gen_operators_index import build_index
+    fresh = build_index()
+    stale = [(old, new) for old, new in
+             zip(md.splitlines(), fresh.splitlines()) if old != new]
+    assert md == fresh, stale[:5]
 
 
 # --- zonal_stats (round 16: basin aggregates on polygon_membership) ----------
