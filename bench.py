@@ -535,7 +535,7 @@ def _scaled_lineitem_path(spark, sf_dir, factor=10):
 def _q_threshold_summary_x10(spark, sf_dir):
     """Flagship exceedance + exact 5-number summary on the 6M-row tier:
     same plan as q_threshold_summary (broadcast threshold join + one
-    exchange + one-buffer percentile array), 10x the ensemble rows."""
+    exchange + one sorted value array per group), 10x the ensemble rows."""
     from pyspark.sql import functions as F
     import __spark_entry__ as entry_mod
     from flood_data_spark.operators.threshold import ensemble_threshold_summary
@@ -567,16 +567,14 @@ def _q_threshold_summary_skew(spark, sf_dir):
     percentiles: the hot cell's every row must reach one reducer (exact
     quantiles need every raw value — salting cannot shrink what the
     final merge must hold), so this entry measures the irreducible
-    straggler.  The caller knows the tier has one ~1.5M-row group, so
-    it names the sorted-window route (exact_impl="ranks"), the measured
-    winner on few-huge-groups shapes."""
+    straggler: the group's one sorted array is built in one task."""
     import __spark_entry__ as entry_mod
     from flood_data_spark.operators.threshold import \
         ensemble_threshold_summary
     return ensemble_threshold_summary(
         _skewed_forecast(spark, sf_dir), entry_mod._thresholds(spark, sf_dir),
         accuracy_mode="exact", join_keys=("partkey",),
-        group_keys=("partkey",), exact_impl="ranks")
+        group_keys=("partkey",))
 
 
 def _q_threshold_summary_skew_approx(spark, sf_dir):
@@ -599,7 +597,7 @@ def _q_threshold_summary_skew_approx(spark, sf_dir):
 def _q_threshold_summary_x100(spark, sf_dir):
     """Flagship exceedance + exact 5-number summary on the 60M-row tier:
     IDENTICAL plan to q_threshold_summary / _x10 (broadcast threshold
-    join + ONE exchange + one-buffer percentile array), 100x the
+    join + ONE exchange + one sorted value array per group), 100x the
     ensemble rows — the second decade of the scaling ladder.  Sublinear
     wall-clock vs the x10 entry is the evidence the shape survives the
     next scale-up: the broadcast side is constant, the exchange carries
@@ -664,8 +662,8 @@ def _q_daily_pipeline_x100(spark, sf_dir):
     measured-sublinearity claim for the COMPOSED pipeline rather than
     just its hottest stage.  Which exchange saturates first at 100x:
     the detailed cache fill — the one corpus-sized exchange (60M rows
-    hash-partitioned by (lat,lon) into the exact-percentile
-    ObjectHashAggregate) — everything downstream (the per-cell summary
+    hash-partitioned by (lat,lon) into the exact summary's sorted-array
+    aggregate) — everything downstream (the per-cell summary
     aggregate, geometry, semi-join) reuses its
     40k-cell partitioning, so downstream cost grows with CELLS (40k,
     constant across tiers), not rows.  Same 200x200 grid as x10: 100x
@@ -1392,19 +1390,16 @@ def _warm_up(spark) -> None:
     bpe_train(spark.createDataFrame([(0, "ab ab"), (1, "cd")],
                                     "doc_id long, text string"),
               n_merges=1)[1].write.format("noop").mode("overwrite").save()
-    # the flagship summary shape itself, on the x1 lineitem, both exact
-    # routes.  Spark's codegen cache keys on generated source, so only the
-    # identical expression shape pre-JITs the flagship entries' classes:
-    # measured at r17, cold pass 1 of the x100 flagship 8.5-13.5 s ->
-    # 6.9-8.0 s over 3 fresh JVMs (JIT 20-23 s -> 11 s)
+    # the flagship exact summary shape itself, on the x1 lineitem.
+    # Spark's codegen cache keys on generated source, so only the
+    # identical expression shape pre-JITs the flagship entries' classes
     fc = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         F.col("l_partkey").alias("partkey"),
         F.col("l_extendedprice").alias("dis24"))
-    for impl in ("percentile", "ranks"):
-        ensemble_threshold_summary(
-            fc, entry_mod._thresholds(spark, SF_DIR), accuracy_mode="exact",
-            join_keys=("partkey",), group_keys=("partkey",),
-            exact_impl=impl).write.format("noop").mode("overwrite").save()
+    ensemble_threshold_summary(
+        fc, entry_mod._thresholds(spark, SF_DIR), accuracy_mode="exact",
+        join_keys=("partkey",), group_keys=("partkey",)
+    ).write.format("noop").mode("overwrite").save()
 
 
 def _tiers(mode: str, spark) -> list:

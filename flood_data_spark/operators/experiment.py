@@ -697,16 +697,15 @@ def winsorized_mean(df: DataFrame, value_col: str, group_cols=(),
     df = df.filter(F.col(value_col).isNotNull())
     dec = "decimal(38,0)"
     if keys:
-        # r16: exact caps via the rank-window pass instead of the
-        # percentile ObjectHashAggregate (bit-identical; ~2x measured
-        # at the gate tier — see stats.rank_quantiles)
+        # exact caps from one sorted array per group
+        # (stats.rank_quantiles, equal to F.percentile)
         from flood_data_spark.operators.stats import rank_quantiles
         caps = rank_quantiles(df, keys, value_col,
                               (float(lower), float(upper)),
                               ("lo_cap", "hi_cap")).drop("n_rows")
     else:
         # keyless: ONE global group — the percentile aggregate keeps
-        # its map-side partial parallelism, the window would not
+        # its map-side partial parallelism and duplicate compression
         caps = (df.groupBy()
                 .agg(F.percentile(F.col(value_col), F.lit(float(lower)))
                      .alias("lo_cap"),

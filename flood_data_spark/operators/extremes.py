@@ -264,10 +264,8 @@ def doy_climatology(df: DataFrame, value_col: str, ts_col: str,
           .select(*keys,
                   (((F.col("_doy") - 1 + F.col("_off") + 366) % 366)
                    + 1).alias("doy"), "_v"))
-    # r16: exact per-cell quantiles via the rank-window pass instead of
-    # the percentile ObjectHashAggregate (bit-identical — see
-    # stats.rank_quantiles); cells are (keys, doy)-many, so the window
-    # parallelism matches the old exchange's
+    # exact per-cell quantiles from one sorted array per (keys, doy) cell
+    # (stats.rank_quantiles, equal to F.percentile)
     from flood_data_spark.operators.stats import rank_quantiles
     names = [f"q{int(round(p * 100)):02d}" for p in percentiles]
     rq = rank_quantiles(sm, [*keys, "doy"], "_v",

@@ -33,69 +33,64 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def sorted_values(value_col) -> Column:
+    """Aggregate: a group's non-null values as one ascending array, NaN
+    last — the buffer [sorted_quantile] reads exact quantiles from.
+
+    Grouped exact quantiles take this shape rather than
+    ``F.percentile``: percentile's buffer is a hash map of every distinct
+    value and its count, which at ~51 distinct values per group (the
+    ensemble grain) compresses nothing and shuffles heavier than the raw
+    values.  Keyless global percentiles keep ``F.percentile``; there the
+    map's duplicate compression pays."""
+    return F.array_sort(F.collect_list(value_col))
+
+
+def sorted_quantile(arr_col: str, q: float) -> Column:
+    """The exact q-quantile of the [sorted_values] array column `arr_col`,
+    interpolated by Percentile.getPercentile's rule, so it equals
+    ``F.percentile``: pos = q·(n−1); ``v_lo`` when pos is whole or both
+    neighbours are equal, else (hi − pos)·v_lo + (pos − lo)·v_hi on
+    doubles.  An empty array (an all-NULL group) reads NULL: every index
+    is out of bounds.
+
+    Signed zeros agree by value only: ``F.percentile``'s sign follows
+    which zero its hash map saw first, the array's follows the stable
+    sort's input order (``[0.0, -0.0, 0.0, -0.0]`` reads Q1 −0.0 there,
+    0.0 here)."""
+    arr = F.col(arr_col)
+    pos = F.lit(float(q)) * (F.size(arr) - 1).cast("double")
+    lo, hi = F.floor(pos), F.ceil(pos)
+    v_lo = F.get(arr, lo.cast("int")).cast("double")
+    v_hi = F.get(arr, hi.cast("int")).cast("double")
+    return F.when((lo == hi) | (v_lo == v_hi), v_lo).otherwise(
+        (hi.cast("double") - pos) * v_lo + (pos - lo.cast("double")) * v_hi)
+
+
 def rank_quantiles(df: DataFrame, group_keys, value_col: str,
                    probs, out_names) -> DataFrame:
-    """Exact interpolated quantiles per group through ONE sort-based
-    rank-window pass — bit-identical to ``F.percentile`` /
-    ``quantile_cont`` (the interpolation reproduces
-    Percentile.getPercentile's float expression order verbatim), but
-    without the ObjectHashAggregate whose partial buffer holds every
-    raw value per group (r16, guide §2.2/§5: the exact-percentile
-    'partial aggregation' shuffles the same bytes as the raw rows and
-    pays hash-map build/merge per value on both sides; the window form
-    is one shuffle + sort + narrow filter — measured ~2-4x faster from
-    the 600k-row gate tier up to the 60M-row flagship tier).
+    """Exact interpolated quantiles per group, equal to ``F.percentile`` /
+    ``quantile_cont``, from one [sorted_values] aggregate read by
+    [sorted_quantile]: one hash exchange carrying each group's values.
 
-    NULL discipline matches percentile: NULLs sort last and are
-    excluded from the quantile ranks; an all-NULL group still emits its
-    row with NULL quantiles.  Returns one row per group:
-    (keys…, n_rows BIGINT  — count(*) incl. NULL values —, *out_names).
+    NULLs are skipped; an all-NULL group still emits its row with NULL
+    quantiles.  Returns one row per group:
+    (keys…, n_rows BIGINT — count(*) incl. NULL values —, *out_names).
 
-    Scale note: parallelism is group-count-bounded (each group sorts in
-    one task).  That is the right trade for group-keyed callers; for a
-    single giant group keep the percentile aggregate (map-side partials
-    still distribute the buffer build) or the bucketed two-pass rank
-    (operators/postprocess quantile_map machinery)."""
-    from pyspark.sql import Window
-
+    Parallelism is group-count-bounded: each group's array is built and
+    sorted in one task."""
     keys = list(group_keys)
     probs = list(probs)
     names = list(out_names)
     if len(probs) != len(names):
         raise ValueError("rank_quantiles: probs and out_names must "
                          "have equal length")
-    cell = Window.partitionBy(*keys)
-    ordw = cell.orderBy(F.col(value_col).asc_nulls_last())
-    w = df.select(*keys, F.col(value_col).alias("_v"),
-                  F.row_number().over(ordw).alias("_rn"),
-                  F.count(value_col).over(cell).alias("_nn"),
-                  F.count(F.lit(1)).over(cell).alias("_ct"))
-
-    # keep only rows whose 0-based rank is floor/ceil of a q·(nn−1)
-    # position; every group keeps ≥ 1 row (an all-NULL group has
-    # nn == 0, position −q, ceil 0 → the first row, a NULL, matches)
-    keep = None
-    aggs = [F.max("_nn").alias("_n"), F.max("_ct").alias("n_rows")]
-    for i, q in enumerate(probs):
-        pos = F.lit(q) * (F.col("_nn") - 1).cast("double")
-        c = (F.col("_rn") - 1 == F.floor(pos)) | \
-            (F.col("_rn") - 1 == F.ceil(pos))
-        keep = c if keep is None else (keep | c)
-        aggs.append(F.max(F.when(F.col("_rn") - 1 == F.floor(pos),
-                                 F.col("_v"))).alias(f"_lo{i}"))
-        aggs.append(F.max(F.when(F.col("_rn") - 1 == F.ceil(pos),
-                                 F.col("_v"))).alias(f"_hi{i}"))
-    g = w.filter(keep).groupBy(*keys).agg(*aggs)
-
-    qcols = []
-    for i, (q, name) in enumerate(zip(probs, names)):
-        pos = F.lit(q) * (F.col("_n") - 1).cast("double")
-        lo, hi = F.floor(pos), F.ceil(pos)
-        # Percentile.getPercentile's float expression order, verbatim
-        qcols.append(F.when(lo == hi, F.col(f"_lo{i}")).otherwise(
-            (hi.cast("double") - pos) * F.col(f"_lo{i}")
-            + (pos - lo.cast("double")) * F.col(f"_hi{i}")).alias(name))
-    return g.select(*keys, "n_rows", *qcols)
+    # sum(1) is count(*) that stays nullable, as callers' schemas read
+    g = df.groupBy(*keys).agg(F.sum(F.lit(1)).alias("n_rows"),
+                              sorted_values(value_col).alias("_s"))
+    return g.select(*keys, "n_rows",
+                    *[sorted_quantile("_s", q).alias(name)
+                      for q, name in zip(probs, names)])
 
 
 def equidepth_bounds(df: DataFrame, value_col: str,

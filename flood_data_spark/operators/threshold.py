@@ -10,7 +10,8 @@ Semantics parity with reference flood/spark/transforms.py:112-150
   dis24 >= threshold_Ny  → p_above_Ny for N in threshold_years;
 - 5-number summary of dis24: min, Q1, median, Q3, max, with an accuracy mode
   switch: 'approx' → percentile_approx sketch, 'exact' → true percentile
-  with linear interpolation (reference transforms.py:132-137).
+  with linear interpolation (reference transforms.py:132-137), read off one
+  sorted array of the group's values (operators/stats.sorted_quantile).
 
 Spark-first differences from the reference:
 - the threshold table is ~1 row/cell and static → we *broadcast* it instead
@@ -31,116 +32,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flood_data_spark.config import DEFAULT_CONFIG
+from flood_data_spark.operators.stats import sorted_quantile, sorted_values
 
 GROUP_KEYS = ("latitude", "longitude", "issued_on", "valid_for", "step")
-
-
-def _quantiles_array(col: str, qs, accuracy_mode: str):
-    """All requested quantiles from ONE aggregate buffer: the per-group value
-    buffer (exact) / sketch (approx) is built once instead of once per
-    quantile — ~25% off the flagship agg at sf0.1 with identical values."""
-    arr = F.array(*[F.lit(q) for q in qs])
-    if accuracy_mode == "approx":
-        return F.percentile_approx(col, arr)
-    return F.percentile(col, arr)
-
-
-def _exact_summary_via_ranks(joined: DataFrame, group_keys, value_col: str,
-                             years, qs=(0.25, 0.50, 0.75)) -> DataFrame:
-    """Exact exceedance + 5-number summary through ONE sort-based window pass
-    instead of percentile's ObjectHashAggregate.
-
-    F.percentile's partial buffer holds every raw value per group (it is an
-    exact aggregate), so the 'partial aggregation' shuffles the same bytes as
-    the raw rows while paying OpenHashMap build/merge per value on both sides.
-    Sorting the rows within each group and keeping only the rows whose
-    0-based rank is floor/ceil of q*(n-1) replaces that with a plain shuffle
-    + sort + narrow filter: same single exchange (the window's
-    hashpartitioning is reused by the final groupBy), bit-identical output
-    (exceptAll == 0 both ways; the interpolation reproduces
-    Percentile.getPercentile's exact float expression order).
-
-    Measured verdict (r16, sf0.1 local[32]): NOT the default.  Isolated it
-    wins the standalone 60M-row tier 2x (5.1 s vs 10.6 s min-of-3), but the
-    windowed intermediate materializes every input row plus ~9 window
-    columns before the rank filter, and that wide buffer made it LOSE
-    inside the full bench session (pass-2 x100 17.2 s vs 10.4 s) and inside
-    the composed daily pipeline (isolated 5.8 s vs 4.5 s; in-bench 8.2 s vs
-    4.4 s), where the percentile aggregate's map-side partial keeps the
-    post-join relation narrow.  The caller names this route with
-    ensemble_threshold_summary(exact_impl="ranks") when its groups are few
-    and large (past ~100k rows each): percentile's per-value buffer then
-    multiplies per-core buffer/GC pressure for no parallel gain (the r16
-    hot-cell skew tier read 11.24 s at 32 cores vs 5.75 s at 8), and one
-    sorted pass wins (r17 same-session A/B on that tier: 4.12 s vs 5.15 s
-    at 32 cores, 4.36 s vs 5.18 s at 8).
-
-    NULL discipline matches F.percentile/min/max (NULLs ignored for the
-    summary: ranks are computed against the non-null count with NULLs sorted
-    last) and the when/otherwise(0) exceedance ladder (NULL rows still count
-    in the denominator via the unfiltered window avg).
-    """
-    from pyspark.sql import Window
-
-    gk = list(group_keys)
-    flags = [F.when(F.col(value_col) >= F.col(f"threshold_{int(y)}y"),
-                    F.lit(1)).otherwise(F.lit(0)).alias(f"_e{int(y)}")
-             for y in years]
-    pre = joined.select(*gk, F.col(value_col).alias("_v"), *flags)
-
-    # One full-data pass: shuffle by the group keys, sort by value, and
-    # compute rank + the unbounded per-group aggregates as window columns
-    # (two WindowExecs over ONE Exchange + ONE Sort).  Then drop everything
-    # except the <= 6 rows per group that can be a quantile endpoint and
-    # finish with a groupBy over those narrow survivors — that second
-    # exchange carries ~6 rows/group (it cannot be elided because the float
-    # group keys are normalizenanandzero-wrapped in the window's output
-    # partitioning, which EnsureRequirements can't match to the raw
-    # grouping attributes; at <= 6 rows/group it is noise).
-    cell = Window.partitionBy(*gk)
-    ordw = cell.orderBy(F.col("_v").asc_nulls_last())
-    w = pre.select(
-        *gk, "_v",
-        F.row_number().over(ordw).alias("_rn"),
-        F.count("_v").over(cell).alias("_nn"),
-        F.min("_v").over(cell).alias("_mn"),
-        F.max("_v").over(cell).alias("_mx"),
-        *[F.avg(f"_e{int(y)}").over(cell).alias(f"_p{int(y)}")
-          for y in years])
-
-    # keep only rows whose 0-based rank is floor/ceil of a q*(nn-1)
-    # position; every group keeps >= 1 row (for an all-NULL group nn == 0
-    # puts the position at -q whose ceil 0 matches the first row, a NULL,
-    # so the quantiles come out NULL exactly like F.percentile)
-    keep_cond = None
-    for q in qs:
-        pos = F.lit(q) * (F.col("_nn") - 1).cast("double")
-        c = (F.col("_rn") - 1 == F.floor(pos)) | \
-            (F.col("_rn") - 1 == F.ceil(pos))
-        keep_cond = c if keep_cond is None else (keep_cond | c)
-
-    aggs = [F.max(f"_p{int(y)}").alias(f"p_above_{int(y)}y") for y in years]
-    aggs += [F.max("_mn").alias("min_dis"), F.max("_mx").alias("max_dis"),
-             F.max("_nn").alias("_n")]
-    for i, q in enumerate(qs):
-        pos = F.lit(q) * (F.col("_nn") - 1).cast("double")
-        aggs.append(F.max(F.when(F.col("_rn") - 1 == F.floor(pos),
-                                 F.col("_v"))).alias(f"_lo{i}"))
-        aggs.append(F.max(F.when(F.col("_rn") - 1 == F.ceil(pos),
-                                 F.col("_v"))).alias(f"_hi{i}"))
-    g = w.filter(keep_cond).groupBy(*gk).agg(*aggs)
-
-    qcols = []
-    for i, (q, name) in enumerate(zip(qs, ("Q1_dis", "median_dis",
-                                           "Q3_dis"))):
-        pos = F.lit(q) * (F.col("_n") - 1).cast("double")
-        lo, hi = F.floor(pos), F.ceil(pos)
-        # Percentile.getPercentile's float expression order, verbatim
-        qcols.append(F.when(lo == hi, F.col(f"_lo{i}")).otherwise(
-            (hi.cast("double") - pos) * F.col(f"_lo{i}")
-            + (pos - lo.cast("double")) * F.col(f"_hi{i}")).alias(name))
-    p_cols = [f"p_above_{int(y)}y" for y in years]
-    return g.select(*gk, *p_cols, "min_dis", *qcols, "max_dis")
+_QS = (0.25, 0.50, 0.75)
+_Q_NAMES = ("Q1_dis", "median_dis", "Q3_dis")
 
 
 def combine_threshold_rasters(dfs: Sequence[DataFrame],
@@ -169,6 +65,9 @@ def combine_threshold_rasters(dfs: Sequence[DataFrame],
     hash partitioning — N inputs cost N input shuffles, not 2(N-1) (the
     reference forces repartition(100) by hand; AQE sizes the exchanges here).
     `sort` is a global sort for the final write layout — disable it mid-plan.
+    A partitioned write (`sources.parquet.write_parquet(partition_by=)`,
+    `upsert_partitions`) keeps that order only when the sort is led by the
+    partition columns, so this (latitude, longitude) order is lost there.
 
     check=True runs count() actions (cheap QA on the once-per-deployment
     thresholds build, the reference runs them unconditionally).  Note the
@@ -228,7 +127,6 @@ def ensemble_threshold_summary(forecast_df: DataFrame,
                                group_keys=GROUP_KEYS,
                                join_keys=("latitude", "longitude"),
                                value_col: str = "dis24",
-                               exact_impl: str = "percentile",
                                observation=None) -> DataFrame:
     """forecast (1 row per ensemble member) × thresholds → detailed forecast
     (1 row per cell/step) with p_above_Ny and the value 5-number summary.
@@ -237,16 +135,12 @@ def ensemble_threshold_summary(forecast_df: DataFrame,
     are configurable so the operator applies to any ensemble-shaped table;
     `group_keys` may hold column names or Columns.
 
-    `exact_impl` selects how accuracy_mode='exact' computes the quantiles,
-    and the caller names the route from the shape it knows — building the
-    DataFrame fires no job:
-    - 'percentile' (default): one ObjectHashAggregate pass with a map-side
-      partial, the winner on many small groups such as the flood grain
-      (~51 members per cell/step);
-    - 'ranks' ([_exact_summary_via_ranks]): one sorted window pass, the
-      winner on a few groups past ~100k rows each.
-    Both routes are bit-identical (pinned in tests/test_threshold.py), so
-    the choice affects performance only.
+    accuracy_mode='exact' collects each group's values into one sorted
+    array ([stats.sorted_values]) and reads min and max off its ends and
+    Q1 / median / Q3 by Percentile.getPercentile's interpolation
+    ([stats.sorted_quantile]): equal to ``F.percentile`` / ``min`` /
+    ``max`` (pinned in tests/test_threshold.py), in one groupBy whose
+    buffer is the raw values rather than percentile's per-value hash map.
 
     `observation` (a pyspark `Observation`), when given, rides the
     forecast ⋈ thresholds join and reports `join_rows` and `matched_rows`
@@ -255,8 +149,6 @@ def ensemble_threshold_summary(forecast_df: DataFrame,
     """
     if accuracy_mode not in ("approx", "exact"):
         raise ValueError("accuracy_mode must be 'approx' or 'exact'")
-    if exact_impl not in ("percentile", "ranks"):
-        raise ValueError("exact_impl must be 'percentile' or 'ranks'")
     years = threshold_years or DEFAULT_CONFIG.threshold_years
 
     rhs = threshold_df
@@ -272,9 +164,6 @@ def ensemble_threshold_summary(forecast_df: DataFrame,
                                 F.count(F.lit(1)).alias("join_rows"),
                                 F.count("_matched").alias("matched_rows"))
 
-    if accuracy_mode == "exact" and exact_impl == "ranks":
-        return _exact_summary_via_ranks(joined, group_keys, value_col, years)
-
     # when/otherwise(0), NOT avg(cast(cmp)): a NULL threshold (cell missing
     # from the threshold table) must count as "not exceeded" (p = 0.0), the
     # reference's exceedance semantics (flood/spark/transforms.py:121-129);
@@ -286,19 +175,25 @@ def ensemble_threshold_summary(forecast_df: DataFrame,
          .alias(f"p_above_{int(y)}y")
         for y in years
     ]
-    aggs += [
-        F.min(value_col).alias("min_dis"),
-        _quantiles_array(value_col, (0.25, 0.50, 0.75), accuracy_mode)
-        .alias("_q"),
-        F.max(value_col).alias("max_dis"),
-    ]
+    if accuracy_mode == "exact":
+        aggs.append(sorted_values(value_col).alias("_s"))
+        summary = [F.get("_s", 0).alias("min_dis"),
+                   *[sorted_quantile("_s", q).alias(n)
+                     for q, n in zip(_QS, _Q_NAMES)],
+                   F.get("_s", F.size("_s") - 1).alias("max_dis")]
+    else:
+        aggs += [F.min(value_col).alias("min_dis"),
+                 F.percentile_approx(value_col,
+                                     F.array(*[F.lit(q) for q in _QS]))
+                 .alias("_q"),
+                 F.max(value_col).alias("max_dis")]
+        summary = ["min_dis",
+                   *[F.element_at("_q", i + 1).alias(n)
+                     for i, n in enumerate(_Q_NAMES)],
+                   "max_dis"]
     p_cols = [f"p_above_{int(y)}y" for y in years]
     return (joined.groupBy(*group_keys).agg(*aggs)
-            .select(*group_keys, *p_cols, "min_dis",
-                    F.element_at("_q", 1).alias("Q1_dis"),
-                    F.element_at("_q", 2).alias("median_dis"),
-                    F.element_at("_q", 3).alias("Q3_dis"),
-                    "max_dis"))
+            .select(*group_keys, *p_cols, *summary))
 
 
 def alert_triggers(df: DataFrame, prob_col: str, order_col: str,

@@ -55,6 +55,14 @@ def read_control(spark: SparkSession, path: str,
 def write_parquet(df: DataFrame, path: str,
                   mode: str = "overwrite",
                   partition_by: list | None = None) -> None:
+    """Write `df` as parquet, hive-partitioned by `partition_by` if given.
+
+    A partitioned write keeps the frame's row order only when its sort is
+    led by the partition columns: the write adds a local sort by them, and
+    the optimizer then turns any other global sort into a plain range
+    repartition.  The daily products lead with issued_on and keep their
+    order; `operators.threshold.combine_threshold_rasters(sort=True)`
+    sorts by (latitude, longitude) and loses it under `partition_by`."""
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -83,6 +91,10 @@ def upsert_partitions(df: DataFrame, path: str, partition_by) -> None:
     `.spark-staging-<job id>` directory and replaces only the partitions
     it wrote (the re-issue loop of `q_daily_incremental` overlaps two such
     upserts).
+
+    Row order survives only a sort led by the partition columns, as in
+    `write_parquet(partition_by=)`; `combine_threshold_rasters(sort=True)`
+    output does not keep its order here.
     """
     pb = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     (df.write.mode("overwrite")

@@ -1,5 +1,5 @@
 """Building an operator's DataFrame fires no Spark job: the caller names
-the route (exact_impl, nbuckets), so the same plan runs unchanged as a
+the route (nbuckets), so the same plan runs unchanged as a
 batch or an incremental query, and every job belongs to the action that
 consumes the result.  The daily pipeline's QA checks ride the jobs that
 compute the products, a day's publish fires a pinned number of jobs, and
@@ -37,11 +37,8 @@ def test_operators_build_without_jobs(spark):
                                    (F.col("id") % 67).cast("double")
                                    .alias("v"))
     forecast, thresholds = _day(spark)
-    builds = {
-        f"threshold-{impl}": (
-            lambda impl=impl: ensemble_threshold_summary(
-                fc, thr, accuracy_mode="exact", exact_impl=impl))
-        for impl in ("percentile", "ranks")}
+    builds = {"threshold-exact": lambda: ensemble_threshold_summary(
+        fc, thr, accuracy_mode="exact")}
     builds.update({
         f"quantile-map-{nb}": (
             lambda nb=nb: quantile_map(sim, obs, "v", ["grp"], nbuckets=nb))

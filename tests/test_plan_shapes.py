@@ -56,26 +56,11 @@ def test_threshold_summary_broadcasts_and_single_exchange(spark, forecast_parque
     plan = _plan(out)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    # default exact path: the classic single-exchange percentile aggregate
-    # (map-side partial keeps the post-join relation narrow — measured
-    # faster in composition than the windowed rank formulation, r16)
+    # exact path: one sorted-array aggregate — no window, no percentile
+    # per-value hash map, the join and the aggregate share one exchange
     assert "Window" not in plan
+    assert "percentile(" not in plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
-
-    # the opt-in rank formulation: full data crosses ONE exchange into the
-    # window sort; the only other exchange carries the <= 6
-    # quantile-endpoint rows per group into the final groupBy (no
-    # percentile ObjectHashAggregate buffering raw values)
-    out_r = ensemble_threshold_summary(forecast, thresholds,
-                                       accuracy_mode="exact",
-                                       exact_impl="ranks")
-    out_r.count()
-    plan_r = _plan(out_r)
-    assert "BroadcastHashJoin" in plan_r
-    assert "SortMergeJoin" not in plan_r
-    assert "ObjectHashAggregate" not in plan_r
-    assert "Window" in plan_r
-    assert plan_r.count("Exchange hashpartitioning") <= 2, plan_r
 
     # approx mode keeps the classic single-exchange sketch aggregate
     out_a = ensemble_threshold_summary(forecast, thresholds,

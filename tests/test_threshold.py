@@ -95,74 +95,126 @@ def test_bad_accuracy_mode_rejected(spark):
                                    accuracy_mode="bogus")
 
 
-def test_exact_rank_path_matches_percentile_bitwise(spark):
-    """r16 regression pin: the rank-based exact path must stay
-    bit-identical to the F.percentile formulation it replaced, on
-    adversarial shapes — NULL values, ties, singleton groups, all-NULL
-    groups, cells missing from the threshold table (NULL thresholds)."""
+# Adversarial value groups for the exact-quantile pins: NaN (sorts last),
+# +-inf, nulls, an all-null group, a 1-member group, duplicate-heavy groups
+# (equal interpolation endpoints) and signed zeros.  Signed zeros compare by
+# value only: F.percentile's sign follows which zero its hash map saw first.
+_EDGE_GROUPS = [
+    [float("nan"), 1.0, 2.0, float("nan")],
+    [float("nan")] * 3,
+    [float("-inf"), 0.0, float("inf")],
+    [float("inf"), float("inf"), 1.0],
+    [float("-inf"), float("-inf")],
+    [None, 3.0, None, 1.0, 2.0],
+    [None, None],
+    [5.0],
+    [2.0] * 7 + [3.0] * 5 + [2.5],
+    [0.1] * 9 + [0.7] * 9,
+    [1 / 3] * 6 + [2 / 3] * 6,
+    [0.0, -0.0, 0.0, -0.0],
+]
+
+
+def _edge_values(seed=23, n_random=40):
+    """(group id, value) rows: the edge groups plus random 1..51-member
+    groups with ties and nulls."""
     import random
 
+    rnd = random.Random(seed)
+    rows = [(g, v) for g, vals in enumerate(_EDGE_GROUPS) for v in vals]
+    for g in range(len(_EDGE_GROUPS), len(_EDGE_GROUPS) + n_random):
+        for _ in range(rnd.choice([1, 2, 3, 5, 50, 51])):
+            rows.append((g, rnd.choice([
+                rnd.uniform(0, 500),
+                float(round(rnd.uniform(0, 20))),      # ties
+                None if rnd.random() < 0.1 else rnd.uniform(-5, 5)])))
+    return rows
+
+
+_VALUE_TYPES = ("double", "float", "int")
+
+
+def _typed(spark, value_type):
     from pyspark.sql import functions as F
 
-    from flood_data_spark.operators.threshold import _quantiles_array
+    rows = _edge_values()
+    if value_type == "int":   # no NaN / inf in integers
+        rows = [(g, None if v is None or v != v or abs(v) == float("inf")
+                 else float(round(v))) for g, v in rows]
+    return spark.createDataFrame(rows, "g int, v double").select(
+        "g", F.col("v").cast(value_type).alias("v"))
 
-    random.seed(23)
-    rows = []
-    for g in range(120):
-        n = random.choice([1, 2, 3, 5, 50, 101])
-        for _ in range(n):
-            if g % 17 == 0:
-                v = None
-            else:
-                v = random.choice([
-                    random.uniform(0, 500),
-                    float(round(random.uniform(0, 500))),  # ties
-                    None if random.random() < 0.1
-                    else random.uniform(0, 500)])
-            rows.append((float(g % 40), float(g // 40), v))
-    fc = spark.createDataFrame(
-        rows, "latitude double, longitude double, dis24 double") \
-        .withColumn("issued_on", F.lit("2024-01-01").cast("date")) \
-        .withColumn("valid_for", F.lit("2024-01-02").cast("date")) \
-        .withColumn("step", F.lit(24))
+
+def _assert_same_rows(got, want):
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+@pytest.mark.parametrize("value_type", _VALUE_TYPES)
+def test_exact_summary_matches_percentile(spark, value_type):
+    """The exact summary equals a direct F.percentile / min / max aggregate
+    on adversarial groups, for float, double and integer values, with name
+    or Column group keys; cells missing from the threshold table score 0."""
+    from pyspark.sql import functions as F
+
+    vals = _typed(spark, value_type)
+    fc = (vals.select((F.col("g") % 20).cast("double").alias("latitude"),
+                      (F.col("g") / 20).cast("int").cast("double")
+                      .alias("longitude"),
+                      F.col("v").alias("dis24"))
+          .withColumn("issued_on", F.lit("2024-01-01").cast("date"))
+          .withColumn("valid_for", F.lit("2024-01-02").cast("date"))
+          .withColumn("step", F.lit(24)))
     thr = spark.createDataFrame(
-        [(float(i), float(j), 80.0 + i, 150.0 + j, 260.0)
-         for i in range(40) for j in range(2)],  # row 2 cells → NULL thr
+        [(float(i), 0.0, 1.0 + i, 150.0, 260.0) for i in range(20)]
+        + [(float(i), 2.0, 80.0, 150.0 + i, 260.0) for i in range(20)],
         "latitude double, longitude double, threshold_2y double, "
-        "threshold_5y double, threshold_20y double")
+        "threshold_5y double, threshold_20y double")  # longitude 1 → NULL
 
     years = (2, 5, 20)
-    joined = fc.join(F.broadcast(thr), ["latitude", "longitude"], "left")
-    aggs = [F.avg(F.when(F.col("dis24") >= F.col(f"threshold_{y}y"),
-                         F.lit(1)).otherwise(F.lit(0)))
-            .alias(f"p_above_{y}y") for y in years]
-    aggs += [F.min("dis24").alias("min_dis"),
-             _quantiles_array("dis24", (0.25, 0.50, 0.75), "exact")
-             .alias("_q"),
-             F.max("dis24").alias("max_dis")]
     gk = ["latitude", "longitude", "issued_on", "valid_for", "step"]
-    old = (joined.groupBy(*gk).agg(*aggs)
-           .select(*gk, "p_above_2y", "p_above_5y", "p_above_20y",
-                   "min_dis",
-                   F.element_at("_q", 1).alias("Q1_dis"),
-                   F.element_at("_q", 2).alias("median_dis"),
-                   F.element_at("_q", 3).alias("Q3_dis"),
-                   "max_dis"))
-    new = ensemble_threshold_summary(fc, thr, accuracy_mode="exact",
-                                     exact_impl="ranks")
-    assert new.schema == old.schema
-    assert new.exceptAll(old).count() == 0
-    assert old.exceptAll(new).count() == 0
-    # and the default exact path IS the percentile formulation
-    dflt = ensemble_threshold_summary(fc, thr, accuracy_mode="exact")
-    assert dflt.schema == old.schema
-    assert dflt.exceptAll(old).count() == 0
-    assert old.exceptAll(dflt).count() == 0
-    # Column group keys are one more input, on both named routes
-    for impl in ("percentile", "ranks"):
-        by_col = ensemble_threshold_summary(
-            fc, thr, accuracy_mode="exact",
-            group_keys=[F.col(k) for k in gk], exact_impl=impl)
-        assert by_col.schema == old.schema, impl
-        assert by_col.exceptAll(old).count() == 0, impl
-        assert old.exceptAll(by_col).count() == 0, impl
+    joined = fc.join(F.broadcast(thr), ["latitude", "longitude"], "left")
+    q = F.percentile("dis24", F.array(*[F.lit(p) for p in (.25, .5, .75)]))
+    want = (joined.groupBy(*gk).agg(
+        *[F.avg(F.when(F.col("dis24") >= F.col(f"threshold_{y}y"),
+                       F.lit(1)).otherwise(F.lit(0)))
+          .alias(f"p_above_{y}y") for y in years],
+        F.min("dis24").alias("min_dis"), q.alias("_q"),
+        F.max("dis24").alias("max_dis"))
+        .select(*gk, *[f"p_above_{y}y" for y in years], "min_dis",
+                *[F.element_at("_q", i + 1).alias(n) for i, n in
+                  enumerate(("Q1_dis", "median_dis", "Q3_dis"))],
+                "max_dis"))
+    assert want.count() == 52
+    for keys in (gk, [F.col(k) for k in gk]):
+        got = ensemble_threshold_summary(fc, thr, accuracy_mode="exact",
+                                         group_keys=keys)
+        assert got.schema == want.schema
+        _assert_same_rows(got, want)
+
+
+@pytest.mark.parametrize("value_type", _VALUE_TYPES)
+def test_rank_quantiles_matches_percentile(spark, value_type):
+    """rank_quantiles equals a direct F.percentile aggregate: NULL values
+    are skipped, an all-NULL group keeps its row with NULL quantiles, and
+    n_rows counts every row, NULLs included."""
+    from pyspark.sql import functions as F
+
+    from flood_data_spark.operators.stats import rank_quantiles
+
+    vals = _typed(spark, value_type)
+    probs = (0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0)
+    names = [f"q{i}" for i in range(len(probs))]
+    want = vals.groupBy("g").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        *[F.percentile("v", F.lit(p)).alias(n)
+          for p, n in zip(probs, names)])
+    all_null = _EDGE_GROUPS.index([None, None])
+    for keys in (["g"], [F.col("g")]):
+        got = rank_quantiles(vals, keys, "v", probs, names)
+        assert got.columns == want.columns
+        assert [f.dataType for f in got.schema] == \
+            [f.dataType for f in want.schema]
+        _assert_same_rows(got, want)
+        row = got.filter(F.col("g") == all_null).first()
+        assert row.n_rows == 2 and row.q3 is None
