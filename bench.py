@@ -615,22 +615,14 @@ def _q_threshold_summary_x100(spark, sf_dir):
         join_keys=("partkey",), group_keys=("partkey",))
 
 
-def _q_daily_pipeline_x10(spark, sf_dir):
-    """The FULL E1 daily pipeline (plans/daily_pipeline.py) on the
-    6M-row tier — detailed exceedance product + the one per-cell
-    summary aggregate (control, tendency, intensity, peak) + WKT geometry
-    + the summary semi-join back onto detailed, all ONE plan, materialized
-    through the restricted detailed product (which consumes every
-    upstream stage).  The registry gate (q_summary_forecast) checks E1
-    correctness at 1x; this tier shows where exchange pressure lands
-    when every stage sees 10x the cells: the detailed cache fill (the
-    only corpus-sized exchange — everything downstream reuses its
-    (lat,lon)-cell partitioning) and the per-cell summary aggregate over
-    the cached relation."""
+def _daily_pipeline_detailed(spark, sf_dir, lineitem_path):
+    """The detailed product of the exact daily pipeline over a lineitem
+    tier: cells from partkey on the 200x200 grid, steps from line
+    numbers, thresholds from part."""
     from pyspark.sql import functions as F
     from flood_data_spark.plans.daily_pipeline import DailyForecastPipeline
 
-    li = spark.read.parquet(_scaled_lineitem_path(spark, sf_dir))
+    li = spark.read.parquet(lineitem_path)
     lat = F.round(F.lit(0.025) + (F.col("l_partkey") % 200) * 0.05, 3)
     lon = F.round(F.lit(0.025)
                   + ((F.col("l_partkey") / 200).cast("long") % 200) * 0.05, 3)
@@ -656,6 +648,22 @@ def _q_daily_pipeline_x10(spark, sf_dir):
     return products.detailed
 
 
+def _q_daily_pipeline_x10(spark, sf_dir):
+    """The FULL E1 daily pipeline (plans/daily_pipeline.py) on the
+    6M-row tier — detailed exceedance product + the one per-cell
+    summary aggregate (control, tendency, intensity, peak) + WKT geometry
+    + the summary semi-join back onto detailed, all ONE plan, materialized
+    through the restricted detailed product (which consumes every
+    upstream stage).  The registry gate (q_summary_forecast) checks E1
+    correctness at 1x; this tier shows where exchange pressure lands
+    when every stage sees 10x the cells: the detailed cache fill (the
+    only corpus-sized exchange — everything downstream reuses its
+    (lat,lon)-cell partitioning) and the per-cell summary aggregate over
+    the cached relation."""
+    return _daily_pipeline_detailed(
+        spark, sf_dir, _scaled_lineitem_path(spark, sf_dir))
+
+
 def _q_daily_pipeline_x100(spark, sf_dir):
     """The FULL E1 pipeline on the 60M-row second-decade tier — the
     x10 entry's analysis (docs/PLANS.md) extended one more decade, the
@@ -669,34 +677,8 @@ def _q_daily_pipeline_x100(spark, sf_dir):
     constant across tiers), not rows.  Same 200x200 grid as x10: 100x
     the members per cell, the growth mode a bigger GloFAS ensemble
     actually has."""
-    from pyspark.sql import functions as F
-    from flood_data_spark.plans.daily_pipeline import DailyForecastPipeline
-
-    li = spark.read.parquet(_scaled_lineitem_path(spark, sf_dir, 100))
-    lat = F.round(F.lit(0.025) + (F.col("l_partkey") % 200) * 0.05, 3)
-    lon = F.round(F.lit(0.025)
-                  + ((F.col("l_partkey") / 200).cast("long") % 200) * 0.05,
-                  3)
-    issued = F.lit("2024-01-01").cast("date")
-    forecast = li.select(
-        lat.alias("latitude"), lon.alias("longitude"),
-        F.col("l_linenumber").alias("step"),
-        F.col("l_extendedprice").alias("dis24"),
-        issued.alias("issued_on"),
-        F.date_add(issued, F.col("l_linenumber") - 1).alias("valid_for"))
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    plat = F.round(F.lit(0.025) + (F.col("p_partkey") % 200) * 0.05, 3)
-    plon = F.round(F.lit(0.025)
-                   + ((F.col("p_partkey") / 200).cast("long") % 200) * 0.05,
-                   3)
-    thresholds = part.select(
-        plat.alias("latitude"), plon.alias("longitude"),
-        (F.col("p_retailprice") * 0.8).alias("threshold_2y"),
-        F.col("p_retailprice").alias("threshold_5y"),
-        (F.col("p_retailprice") * 1.2).alias("threshold_20y"))
-    products = DailyForecastPipeline(accuracy_mode="exact").run(
-        forecast, thresholds)
-    return products.detailed
+    return _daily_pipeline_detailed(
+        spark, sf_dir, _scaled_lineitem_path(spark, sf_dir, 100))
 
 
 def _q_daily_incremental_x10(spark, sf_dir):
@@ -1400,6 +1382,12 @@ def _warm_up(spark) -> None:
         fc, entry_mod._thresholds(spark, SF_DIR), accuracy_mode="exact",
         join_keys=("partkey",), group_keys=("partkey",)
     ).write.format("noop").mode("overwrite").save()
+    # the exact daily pipeline entries' shape, on the x1 lineitem: without
+    # it the first of them compiles its ~35 classes in its first pass
+    _daily_pipeline_detailed(
+        spark, SF_DIR, f"{SF_DIR}/lineitem.parquet"
+    ).write.format("noop").mode("overwrite").save()
+    spark.catalog.clearCache()
 
 
 def _tiers(mode: str, spark) -> list:

@@ -8,14 +8,11 @@ from flood_data_spark.functions.temporal import normalize_forecast_times
 from flood_data_spark.functions.geometry import (
     add_geometry,
     bbox_filter,
-    cell_bbox_for_point,
-    neighbor_filter,
     point_in_polygon,
 )
 
 __all__ = [
     "round_keys", "grid_index", "with_grid_index", "snap_to_grid",
     "normalize_forecast_times",
-    "add_geometry", "bbox_filter", "cell_bbox_for_point", "neighbor_filter",
-    "point_in_polygon",
+    "add_geometry", "bbox_filter", "point_in_polygon",
 ]

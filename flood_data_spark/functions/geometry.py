@@ -10,8 +10,6 @@ Parquet min/max row-group pruning applies (no UDF, no Sedona dependency).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -66,22 +64,6 @@ def haversine_km(lat1, lon1, lat2, lon2) -> Column:
     return 2 * 6371.0088 * F.asin(F.sqrt(a))
 
 
-def cell_bbox_for_point(lat: float, lon: float,
-                        resolution: float | None = None) -> tuple:
-    """(lat_min, lat_max, lon_min, lon_max) of the grid cell containing the
-    point — driver-side math mirroring flood-api-examples.py:83-120 (floor to
-    grid, inflate by one cell).
-
-    Delegates to operators.serving.grid_cell_bounds so the two entry
-    points can never drift: this used to return unrounded floats
-    (0.15000000000000002-style) while the serving path rounded to key
-    precision, giving subtly different predicates for the same point.
-    """
-    from flood_data_spark.operators.serving import grid_cell_bounds
-
-    return grid_cell_bounds(lat, lon, grid_size=resolution)
-
-
 def bbox_filter(df: DataFrame, lat_min: float, lat_max: float,
                 lon_min: float, lon_max: float) -> DataFrame:
     """Spatial box slice (reference P9, flood/etl/utils.py:16-19) as a native
@@ -127,20 +109,6 @@ def restrict_area(df: DataFrame, lat_min: float, lat_max: float,
     if raster_order:
         out = out.orderBy(F.desc(lat_col), F.asc(lon_col))
     return out
-
-
-def neighbor_filter(df: DataFrame, lat: float, lon: float,
-                    ring: int = 1, resolution: float | None = None) -> DataFrame:
-    """3x3 (or (2r+1)^2) neighborhood fetch around the cell containing the
-    point (reference flood-api-examples.py:199-221 neighborhood query),
-    expressed as a bbox predicate over cell centers."""
-    res = resolution if resolution is not None else DEFAULT_CONFIG.resolution
-    lat0 = math.floor(lat / res) * res
-    lon0 = math.floor(lon / res) * res
-    pad = ring * res
-    return bbox_filter(df,
-                       lat0 - pad, lat0 + res + pad,
-                       lon0 - pad, lon0 + res + pad)
 
 
 def point_in_polygon(df: DataFrame, lat_col: str, lon_col: str,

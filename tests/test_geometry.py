@@ -4,9 +4,11 @@ test/test_spark_transforms.py:617-645 exact-string golden rows."""
 from flood_data_spark.functions.geometry import (
     add_geometry,
     bbox_filter,
-    cell_bbox_for_point,
-    neighbor_filter,
     restrict_area,
+)
+from flood_data_spark.operators.serving import (
+    grid_cell_bounds,
+    neighborhood_lookup,
 )
 
 
@@ -24,9 +26,7 @@ def test_wkt_no_trailing_zero_padding(spark):
 
 
 def test_cell_bbox_for_point():
-    lat_min, lat_max, lon_min, lon_max = cell_bbox_for_point(16.99, -17.96)
-    assert (round(lat_min, 3), round(lat_max, 3)) == (16.95, 17.0)
-    assert (round(lon_min, 3), round(lon_max, 3)) == (-18.0, -17.95)
+    assert grid_cell_bounds(16.99, -17.96) == (16.95, 17.0, -18.0, -17.95)
 
 
 def _center_grid(spark, lat_min, lat_max, lon_min, lon_max, res=0.05):
@@ -81,10 +81,10 @@ def test_restrict_area_default_buffer_and_order(spark):
 
 
 def test_bbox_filter_and_neighbors(spark):
-    cells = [(0.025 + 0.05 * i, 0.025 + 0.05 * j)
+    cells = [(round(0.025 + 0.05 * i, 3), round(0.025 + 0.05 * j, 3))
              for i in range(5) for j in range(5)]
     df = spark.createDataFrame(cells, ["latitude", "longitude"])
     # box covering the 2x2 lower corner
     assert bbox_filter(df, 0.0, 0.08, 0.0, 0.08).count() == 4
     # 3x3 neighborhood around the center cell (0.125, 0.125)
-    assert neighbor_filter(df, 0.13, 0.11, ring=1).count() == 9
+    assert neighborhood_lookup(df, 0.13, 0.11).count() == 9

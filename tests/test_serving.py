@@ -1,6 +1,7 @@
 """Serving-lookup tests (SURVEY §2.3 J8) — grid-cell point and 3×3
-neighborhood queries as pushdown-friendly range predicates, matching the
-reference's intersects semantics (flood-api-examples.py:83-142,199-221)."""
+neighborhood queries as pushdown-friendly membership predicates on the
+``precision`` grid, matching the reference's intersects semantics
+(flood-api-examples.py:83-142,199-221)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -86,12 +87,94 @@ def test_neighborhood_truncated_at_grid_edge(spark):
 
 
 def test_point_lookup_predicate_pushes_down(spark, tmp_path):
-    # written to parquet, the range predicate must reach the scan
+    # written to parquet, the membership predicate must reach the scan,
+    # where the reader prunes row groups and pages by its min/max
     _cells(spark).write.parquet(str(tmp_path / "cells"))
     df = spark.read.parquet(str(tmp_path / "cells"))
     plan = point_lookup(df, 0.26, 0.12)._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan
-    assert "GreaterThanOrEqual(latitude,0.25)" in plan
+    assert "In(latitude, [0.25," in plan
+
+
+def test_new_coordinate_compiles_no_classes(spark, tmp_path):
+    """A point request (the cell, then its 3x3 block) at a coordinate in
+    another cell reuses the classes the first request compiled: the
+    bounds live in an InSet held by reference, not in generated code."""
+    _cells(spark, 20).write.parquet(str(tmp_path / "cells"))
+    df = spark.read.parquet(str(tmp_path / "cells"))
+    compiles = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                .CodegenMetrics.METRIC_COMPILATION_TIME().getCount)
+
+    def request(lat, lon):
+        assert len(point_lookup(df, lat, lon).collect()) == 1
+        assert len(neighborhood_lookup(df, lat, lon).collect()) == 9
+
+    request(0.26, 0.12)
+    before = compiles()
+    request(0.61, 0.87)
+    assert compiles() - before == 0
+
+
+def _keys_around(spark, lat, lon, p=3, quadrant=False):
+    """On-grid keys every 0.005 degrees within 0.2 of (lat, lon): cell
+    centers, cell edges and points between them, rounded to p decimals
+    by Spark as the readers store them; ``quadrant`` keeps lat, lon >= 0."""
+    ax = F.col("id") - 40
+    df = (spark.range(81).select(F.round(F.lit(lat) + ax * 0.005, p)
+                                 .alias("latitude"))
+          .crossJoin(spark.range(81).select(
+              F.round(F.lit(lon) + ax * 0.005, p).alias("longitude"))))
+    if quadrant:
+        df = df.filter((F.col("latitude") >= 0) & (F.col("longitude") >= 0))
+    return df
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("lat, lon, g, p, include_primary, quadrant", [
+    (11.35, 0.15, 0.05, 3, True, False),     # east/north edge snaps
+    (0.15, 11.35, 0.05, 3, True, False),
+    (-5.8, 37.75, 0.05, 3, True, False),     # reference examples
+    (-5.81, 37.7501, 0.05, 3, True, False),
+    (0.01, -0.01, 0.05, 3, True, False),     # equator / prime meridian
+    (-0.01, 0.01, 0.05, 3, True, False),
+    (-0.03, -0.04, 0.05, 3, True, False),
+    (0.01, 0.01, 0.05, 3, False, True),      # truncated at the grid edge
+    (3.14159, -2.71828, 0.1, 4, True, False),
+])
+def test_lookups_match_between_on_rounded_keys(spark, lat, lon, g, p,
+                                               include_primary, quadrant):
+    """On keys rounded to the grid, the membership predicates select
+    exactly the rows the inclusive range predicates selected."""
+    df = _keys_around(spark, lat, lon, p, quadrant)
+    la, lb, oa, ob = grid_cell_bounds(lat, lon, g, p)
+
+    def box(pad):
+        return (F.col("latitude").between(round(la - pad, p),
+                                          round(lb + pad, p))
+                & F.col("longitude").between(round(oa - pad, p),
+                                             round(ob + pad, p)))
+
+    assert _rows(point_lookup(df, lat, lon, g, p)) == \
+        _rows(df.filter(box(0)))
+    want = df.filter(box(g)).withColumn("is_primary", box(0))
+    if not include_primary:
+        want = want.filter(~F.col("is_primary")).drop("is_primary")
+    assert _rows(neighborhood_lookup(
+        df, lat, lon, g, p, include_primary=include_primary)) == _rows(want)
+
+
+def test_off_grid_key_is_not_matched(spark):
+    """The contract: keys lie on the precision grid.  A key off it, which
+    a range predicate matched, matches no lookup."""
+    cells = spark.createDataFrame(
+        [(0.275, 0.125, 1.0), (0.2750000001, 0.125, 2.0)],
+        "latitude double, longitude double, val double")
+    assert [r.val for r in point_lookup(cells, 0.26, 0.12).collect()] == [1.0]
+    block = neighborhood_lookup(cells, 0.26, 0.12).collect()
+    assert [(r.val, r.is_primary) for r in block] == [(1.0, True)]
 
 
 def test_batch_point_lookup_matches_single_lookups(spark):
